@@ -113,7 +113,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     // clean-anchor per-query reference for the outlier re-sweep and
     // the drift signal — the min-over-committed-history ledger, NEVER
     // the latest artifact alone (round-16 ratchet flaw) — read before
@@ -127,26 +127,7 @@ object Bench {
       f"[bench] WARNING: machine is ${busyCpu * 100}%.0f%% busy before Spark " +
         "started — another JVM is racing this recording; timings will read " +
         "high (re-run solo for a citable artifact)")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // round 18: the session memos land REPARTITIONED BY their
-      // consumer key (round 17's layout work) — this makes that
-      // partitioning VISIBLE to consumers, so memo-keyed joins and
-      // aggregates skip their exchange instead of re-shuffling a
-      // relation that is already laid out for them (full-sweep A/B
-      // rec1787068370753 + bisect rec in bench_runs: the graph/dedup
-      // memo families read 0.2-0.8× with untouched controls flat; the
-      // two explosion-heavy consumers were re-landed at explicit
-      // partition counts — see q_item_cf / shingleStringRows notes).
-      // At 100 TB the same flag is what makes a landed table's bucket
-      // layout usable without a re-shuffle.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Materialize every row through a noop sink so timings include the
     // full plan — projections and ORDER BY included; a bare count()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named queries to files — the
   * optimization-round evidence tool (plans/r17/<query>_{before,after}.txt).
   *
@@ -11,8 +9,7 @@ import org.apache.spark.sql.SparkSession
   * Writes <outDir>/<query>_<suffix>.txt with the formatted physical
   * plan (post-analysis, pre-execution — AQE initial plan; Exchange
   * count, join strategies, PushedFilters/ReadSchema all visible).
-  * Uses the same session shape as Bench (local[$SPARK_GRAFT_CPUS],
-  * shuffle.partitions = cpus, AQE on) so the plans match what the
+  * Uses Bench's session (GraftSession) so the plans match what the
   * bench executes.
   */
 object PlanDump {
@@ -20,18 +17,7 @@ object PlanDump {
     require(args.length >= 4, "usage: PlanDump <sfDir> <outDir> <suffix> <q,...>")
     val Array(sfDir, outDir, suffix, qcsv) = args.take(4)
     val names = qcsv.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plan-dump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // match Bench's session (see Bench.scala)
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().appName("graft-plan-dump").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-hygiene sweep over the whole query surface: builds every
   * `SparkEntry.queries` plan and prints each PlanAudit finding —
   * the maintenance tool behind PlanHygieneSpec's allow-lists.
@@ -13,14 +11,7 @@ object PlanSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val kindFilter = args.lift(1)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-plan-sweep")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().appName("graft-plan-sweep").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val flagged = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

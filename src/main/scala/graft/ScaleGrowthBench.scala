@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-growth bench for the dedup family: times each documents-based
@@ -64,19 +63,12 @@ object ScaleGrowthBench {
 
   def main(args: Array[String]): Unit = {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val factor = sys.env.getOrElse("SPARK_GRAFT_GROWTH_FACTOR", "10").toInt
     val (busyCpu, load1) = Bench.preflightRace()
     if (busyCpu > 0.10) System.err.println(
       f"[growth] WARNING: machine ${busyCpu * 100}%.0f%% busy — recording will race")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // synthesize the FACTOR× corpus (copy 0 is the base corpus verbatim)

@@ -2,13 +2,15 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.queries._
 
 /** Driver contract — see SURVEY.md §7.0 + the builder prompt.
   *
-  * `queries` aggregates the per-module operator maps; each name is one
-  * operator from SURVEY.md §2's inventory. `oracleSql` carries the
-  * DuckDB-equivalent ANSI SQL for every query whose semantics are
-  * SQL-expressible; the driver hash-compares both result sets at sf0.01.
+  * `queries`, `oracleSql` and `noOracle` are derived from `modules`;
+  * each name is one operator from SURVEY.md §2's inventory. `oracleSql`
+  * carries the DuckDB-equivalent ANSI SQL for every query whose
+  * semantics are SQL-expressible; the DuckDB compare hash-checks both
+  * result sets at sf0.01.
   */
 object SparkEntry {
 
@@ -26,24 +28,17 @@ object SparkEntry {
         count(lit(1)).as("n"))
       .orderBy("l_returnflag", "l_linestatus")
 
+  /** Every query module. The catalog is derived from this list alone and
+    * built on first use; QueryModule.catalog throws on a broken one. */
+  lazy val modules: Seq[QueryModule] = Seq(
+    RelationalQueries, FunctionQueries, JoinQueries, WindowQueries,
+    StreamQueries, TextQueries, SimilarityQueries, SqlQueries, TpchQueries,
+    GraphQueries, TemporalQueries, CorpusStatsQueries, CurationQueries,
+    SketchQueries, InsightQueries, StatQueries)
+  private lazy val catalog = QueryModule.catalog(modules)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.RelationalQueries.queries ++
-      graft.queries.FunctionQueries.queries ++
-      graft.queries.JoinQueries.queries ++
-      graft.queries.WindowQueries.queries ++
-      graft.queries.StreamQueries.queries ++
-      graft.queries.TextQueries.queries ++
-      graft.queries.SimilarityQueries.queries ++
-      graft.queries.SqlQueries.queries ++
-      graft.queries.TpchQueries.queries ++
-      graft.queries.GraphQueries.queries ++
-      graft.queries.TemporalQueries.queries ++
-      graft.queries.CorpusStatsQueries.queries ++
-      graft.queries.CurationQueries.queries ++
-      graft.queries.SketchQueries.queries ++
-      graft.queries.InsightQueries.queries ++
-      graft.queries.StatQueries.queries
+  def queries: Map[String, (SparkSession, String) => DataFrame] = catalog.queries
 
   /** Queries excluded from Bench's TIMED set (they still run in Verify
     * and keep their correctness checks). q_dedup_minhash_mllib is a
@@ -55,22 +50,9 @@ object SparkEntry {
   val untimed: Set[String] = Set("q_dedup_minhash_mllib")
 
   /** DuckDB-runnable ANSI SQL per query (same parquet tables, registered
-    * under their bare table names). Omitted keys get a rows-only check. */
-  def oracleSql: Map[String, String] =
-    graft.queries.RelationalQueries.oracles ++
-      graft.queries.FunctionQueries.oracles ++
-      graft.queries.JoinQueries.oracles ++
-      graft.queries.WindowQueries.oracles ++
-      graft.queries.StreamQueries.oracles ++
-      graft.queries.TextQueries.oracles ++
-      graft.queries.SimilarityQueries.oracles ++
-      graft.queries.SqlQueries.oracles ++
-      graft.queries.TpchQueries.oracles ++
-      graft.queries.GraphQueries.oracles ++
-      graft.queries.TemporalQueries.oracles ++
-      graft.queries.CorpusStatsQueries.oracles ++
-      graft.queries.CurationQueries.oracles ++
-      graft.queries.SketchQueries.oracles ++
-      graft.queries.InsightQueries.oracles ++
-      graft.queries.StatQueries.oracles
+    * under their bare table names). */
+  def oracleSql: Map[String, String] = catalog.oracleSql
+
+  /** Query name → why it has no oracle; these get a rows-only check. */
+  def noOracle: Map[String, String] = catalog.noOracle
 }

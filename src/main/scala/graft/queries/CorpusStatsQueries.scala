@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.DotF.dotF
@@ -22,8 +21,7 @@ import graft.functions.DotF.dotF
   *    the model/threshold side of each join is broadcast (lang counts,
   *    percentile bounds, centroid components are all tiny).
   */
-object CorpusStatsQueries {
-  type Q = (SparkSession, String) => DataFrame
+object CorpusStatsQueries extends QueryModule {
 
   /** Character-level Shannon entropy (bits/char) + distinct-char count
     * per document — the encoding-breakage / binary-junk / keyboard-mash
@@ -553,6 +551,9 @@ object CorpusStatsQueries {
                        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS shingle
               FROM toks WHERE len(w) >= 3),
        dsh AS (SELECT DISTINCT doc_id, shingle FROM sh0)"""
+
+  override val noOracle: Map[String, String] = Map(
+    "q_pca_project" -> "no eigensolver in SQL; q_pca_var_explained and PcaSpec check it")
 
   val oracles: Map[String, String] = Map(
     // per-doc ratio micro-scaled by integer division, exact sums;

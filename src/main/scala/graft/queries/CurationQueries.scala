@@ -27,8 +27,7 @@ import graft.Tables
   *    any engine), rounded-score ranking for BM25/PMI so a 1-ulp libm
   *    `ln` difference between engines cannot flip an order-by.
   */
-object CurationQueries {
-  type Q = (SparkSession, String) => DataFrame
+object CurationQueries extends QueryModule {
 
   /** BM25 (Okapi, k1 = 1.2, b = 0.75) top-3 terms per document — the
     * sparse-retrieval / keyword-extraction upgrade of [[TextQueries]]'
@@ -501,6 +500,10 @@ object CurationQueries {
               round(avg(n_chars), 4) AS avg_chars
        FROM documents WHERE lang = 'en'
        GROUP BY source ORDER BY source"""
+
+  override val noOracle: Map[String, String] = Map(
+    "q_bpe_merges" -> "learned merges; q_bpe_first_merge and BpeSpec pin them",
+    "q_bpe_encode" -> "uses the learned merges; q_bpe_encode_pin and BpeSpec check it")
 
   val oracles: Map[String, String] = Map(
     // identical space-joined bigram keys; add-0.5 smoothing over the

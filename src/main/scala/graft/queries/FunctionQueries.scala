@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -15,8 +14,7 @@ import graft.Tables
   * whole-stage codegen and predicate pushdown; the UDF is an opaque
   * black box to the optimizer.
   */
-object FunctionQueries {
-  type Q = (SparkSession, String) => DataFrame
+object FunctionQueries extends QueryModule {
 
   /** F4 `clean_data` semantics as a composable Column: strip everything
     * outside [, a-zA-Z0-9] to spaces, take the first space-token

@@ -31,8 +31,7 @@ import graft.plans.Checkpoints
   * by src and the join degrading to co-partitioned shuffle — the
   * iteration structure is unchanged.
   */
-object GraphQueries {
-  type Q = (SparkSession, String) => DataFrame
+object GraphQueries extends QueryModule {
 
   private val Damping = 0.85
   private val Iterations = 3

@@ -21,8 +21,7 @@ import graft.Tables
   * integer cents so no boundary can flip on a last-bit double
   * difference.
   */
-object InsightQueries {
-  type Q = (SparkSession, String) => DataFrame
+object InsightQueries extends QueryModule {
 
   // ---------------------------------------------------------------- geo
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -21,8 +21,7 @@ import graft.Tables
   *    (single shuffle on the join key, no point-in-time self-join) —
   *    the pattern that survives 1000 executors.
   */
-object JoinQueries {
-  type Q = (SparkSession, String) => DataFrame
+object JoinQueries extends QueryModule {
 
   /** J1 equi inner join + aggregate (planner picks the join strategy). */
   private val joinInner: Q = (s, d) =>

@@ -24,8 +24,7 @@ import graft.Tables
   *    4 bands of 16 bits — Hamming distance <= 3 implies at least one
   *    identical band).
   */
-object SimilarityQueries {
-  type Q = (SparkSession, String) => DataFrame
+object SimilarityQueries extends QueryModule {
 
   /** Cosine similarity between two float-array columns, computed in
     * double precision by the native [[graft.functions.DotF]] codegen
@@ -1545,6 +1544,18 @@ object SimilarityQueries {
          vt AS (SELECT doc_id, cs,
                        row_number() OVER (ORDER BY cs DESC, doc_id) AS v_rank
                 FROM vs ORDER BY cs DESC, doc_id LIMIT 50)"""
+
+  override val noOracle: Map[String, String] = Map(
+    "q_cluster_cap" -> "KMeans cells not replayable; q_cluster_cap_pin checks the cap invariants",
+    "q_knn_ivf" -> "approximate; q_knn_ivf_recall pins its recall against q_knn_exact",
+    "q_knn_ivf_pq" -> "approximate; q_knn_ivf_pq_recall pins its recall against q_knn_exact",
+    "q_knn_ivf_opq" -> "approximate; q_knn_ivf_opq_recall pins its recall against q_knn_exact",
+    "q_knn_batch_ivf" -> "approximate; q_knn_batch_ivf_recall pins its recall against exact",
+    "q_knn_lsh" -> "Gaussian planes; its md5-plane twin q_knn_lsh_oracle is hash-gated",
+    "q_knn_lsh_multi" -> "approximate; TextSimilaritySpec checks its recall beats q_knn_lsh",
+    "q_dedup_minhash" -> "xxhash signatures; its md5 twin q_dedup_minhash_oracle is hash-gated",
+    "q_dedup_minhash_mllib" -> "MLlib demo; TextSimilaritySpec checks it against q_dedup_ngram",
+    "q_dedup_simhash" -> "64-bit simhash; its replayable twin q_dedup_simhash_oracle is hash-gated")
 
   val oracles: Map[String, String] = Map(
     // both retrievers fully replayed: BM25 term scores as integer

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -27,8 +26,7 @@ import graft.Tables
   * 1000-executor cluster serves distinct-count rollup dashboards: one
   * sketch-build pass, then unions over KB-sized state.
   */
-object SketchQueries {
-  type Q = (SparkSession, String) => DataFrame
+object SketchQueries extends QueryModule {
 
   /** One row: exact distinct + exact quantiles beside their sketch
     * twins' error pins. Plan-shape notes (both measured at sf0.1):

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import graft.Tables
 
 /** SQL-text entry point (SURVEY.md §3.3): the reference drives SQLite /
@@ -11,8 +11,7 @@ import graft.Tables
   * proves the SQL surface end-to-end; the oracle is literally the same
   * ANSI text.
   */
-object SqlQueries {
-  type Q = (SparkSession, String) => DataFrame
+object SqlQueries extends QueryModule {
 
   private def sql(text: String): Q = (s, d) => {
     Tables.registerAll(s, d)

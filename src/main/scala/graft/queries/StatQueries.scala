@@ -30,8 +30,7 @@ import graft.Tables
   *  - everything else is map-side-combined groupBy plus broadcast of
   *    dimension- or 1-row aggregates.
   */
-object StatQueries {
-  type Q = (SparkSession, String) => DataFrame
+object StatQueries extends QueryModule {
 
   private val dec = DecimalType(38, 0)
 

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -14,8 +13,7 @@ import graft.Tables
   * as epoch seconds (BIGINT) to sidestep parquet timestamp-unit
   * ambiguity between engines.
   */
-object StreamQueries {
-  type Q = (SparkSession, String) => DataFrame
+object StreamQueries extends QueryModule {
 
   /** Tumbling 1-hour window per event_type. */
   private val windowTumbling: Q = (s, d) =>

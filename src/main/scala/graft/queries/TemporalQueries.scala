@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
@@ -13,8 +12,7 @@ import graft.Tables
   * reference is a single-snapshot table); engine extensions, SURVEY
   * §8.4.
   */
-object TemporalQueries {
-  type Q = (SparkSession, String) => DataFrame
+object TemporalQueries extends QueryModule {
 
   /** Resample events to an hourly grid per event_type and forward-fill
     * gaps (last observation carried forward), flagging filled rows.

@@ -21,8 +21,7 @@ import graft.functions.JaroWinkler.jaroWinkler
   *    in exact integer arithmetic (no float boundary).
   *  - everything emits counts/IDs, never re-shipped full texts.
   */
-object TextQueries {
-  type Q = (SparkSession, String) => DataFrame
+object TextQueries extends QueryModule {
 
   private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
 
@@ -1881,6 +1880,11 @@ object TextQueries {
                       row_number() OVER (PARTITION BY doc_id
                         ORDER BY score DESC, cand ASC) AS rn
                FROM sc)"""
+
+  override val noOracle: Map[String, String] = Map(
+    "q_compression_ratio" -> "DuckDB has no deflate; q_compression_ratio_pin checks the codec",
+    "q_doc_fingerprint" -> "DuckDB has no fingerprint64; TextSimilaritySpec pins the Scala hash",
+    "q_doc_winnow" -> "hash not replayable in DuckDB; md5 twin q_doc_winnow_oracle is hash-gated")
 
   val oracles: Map[String, String] = Map(
     "q_compression_ratio_pin" ->

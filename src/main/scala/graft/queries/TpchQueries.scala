@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -10,8 +10,7 @@ import graft.Tables
   * and reorder the star joins. Dates are emitted as epoch days
   * (integers) for cross-engine hash parity.
   */
-object TpchQueries {
-  type Q = (SparkSession, String) => DataFrame
+object TpchQueries extends QueryModule {
 
   /** Q1 pricing summary — the canonical scan-and-aggregate benchmark,
     * in its full 8-aggregate form (q_groupby carries the shape with
@@ -280,7 +279,7 @@ object TpchQueries {
     * decorrelated form is an aggregate-on-partkey joined back — Catalyst
     * must pull the correlated predicate up, not execute one subplan per
     * candidate row. */
-  private val q2Sql =
+  private[graft] val q2Sql =
     """SELECT s_acctbal, s_name, n_name, p_partkey, p_type,
               l_extendedprice AS supply_price
        FROM part, supplier, lineitem, nation, region
@@ -305,10 +304,10 @@ object TpchQueries {
     * correlation key's filter below the subquery aggregate). Both the
     * outer rows and the per-part minimum are functions of ONE
     * relation — size-15 parts' EUROPE-supplier line rows — computed
-    * once, persisted, and re-read for the min aggregate (a few
-    * hundred partkeys, broadcast back). MIN is an element of the set,
-    * so the equality compares exact doubles. DuckDB replays [[q2Sql]]
-    * verbatim. */
+    * once, persisted, and re-read for the min aggregate (one row per
+    * qualifying partkey — a count that grows with the scale factor —
+    * broadcast back). MIN is an element of the set, so the equality
+    * compares exact doubles. DuckDB replays [[q2Sql]] verbatim. */
   private val q2Df: Q = (s, d) => {
     val pf = Tables.part(s, d).filter(col("p_size") === 15)
       .select(col("p_partkey"), col("p_type"))
@@ -341,7 +340,7 @@ object TpchQueries {
     * l_quantity is integer-valued in the testdata, so the per-part sums
     * are exact doubles and the threshold comparison is deterministic
     * across engines regardless of summation order. */
-  private val q17Sql =
+  private[graft] val q17Sql =
     """SELECT round(sum(l_extendedprice) / 7.0, 2) AS avg_yearly
        FROM lineitem, part
        WHERE p_partkey = l_partkey AND p_brand = 'Brand#13' AND p_type = 'PROMO'
@@ -350,7 +349,7 @@ object TpchQueries {
 
   /** Q18 large-volume customers: IN over a grouped HAVING subquery
     * (rewritten to a left-semi join on the aggregated orderkeys). */
-  private def q18Sql(dateDays: String) =
+  private[graft] def q18Sql(dateDays: String) =
     s"""SELECT c_name, c_custkey, o_orderkey,
               CAST($dateDays AS INTEGER) AS o_date_days,
               o_totalprice, sum(l_quantity) AS sum_qty
@@ -369,7 +368,7 @@ object TpchQueries {
     * the pair also shipped outside 1997. Exercises scalar-subquery
     * merging on top of decorrelation. Integer-valued quantities make
     * both threshold comparisons exact (0.5×exact-sum is exact). */
-  private val q20Sql =
+  private[graft] val q20Sql =
     """SELECT s_name, s_acctbal
        FROM supplier
        WHERE s_suppkey IN (
@@ -394,7 +393,7 @@ object TpchQueries {
     * "no other supplier also failed") — left-semi plus left-anti join
     * after RewritePredicateSubquery. l_returnflag='R' stands in for the
     * reference Q21's receipt>commit lateness (columns absent here). */
-  private val q21Sql =
+  private[graft] val q21Sql =
     """SELECT s_name, count(*) AS numwait
        FROM supplier, lineitem l1, orders, nation
        WHERE s_suppkey = l1.l_suppkey
@@ -432,7 +431,7 @@ object TpchQueries {
     * the fraction-of-global-total shape. The CTE is referenced twice;
     * Spark evaluates the scalar branch once (run-once subquery), not
     * per group. */
-  private val q11Sql =
+  private[graft] val q11Sql =
     """WITH ps AS (SELECT l_partkey, l_suppkey,
                           sum(l_extendedprice * l_quantity) AS val
                    FROM lineitem GROUP BY l_partkey, l_suppkey)
@@ -512,7 +511,7 @@ object TpchQueries {
     * input, once inside the scalar MAX subquery. Revenue is rounded at
     * the CTE boundary so the equality join on the maximum compares
     * engine-stable 2-decimal values. */
-  private val q15Sql =
+  private[graft] val q15Sql =
     """WITH revenue AS (
          SELECT l_suppkey AS supplier_no,
                 round(sum(l_extendedprice * (1 - l_discount)), 2) AS total_revenue
@@ -530,11 +529,13 @@ object TpchQueries {
     * null-aware anti join, the one predicate-subquery rewrite the other
     * TPC-H shapes don't reach (s_acctbal < 0 stands in for the comment
     * LIKE '%Complaints%' exclusion). The part-supplier relation is the
-    * distinct lineitem pairing, the no-partsupp convention. */
-  private val q16Sql =
-    """SELECT p_brand, p_type, p_size,
+    * distinct lineitem pairing, the no-partsupp convention. `pairs` is
+    * the derived table's select list: the oracle and Spark texts differ
+    * only there, so the filter constants are written once. */
+  private def q16Text(pairs: String) =
+    s"""SELECT p_brand, p_type, p_size,
               count(DISTINCT ps.l_suppkey) AS supplier_cnt
-       FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) ps, part
+       FROM (SELECT $pairs FROM lineitem) ps, part
        WHERE p_partkey = ps.l_partkey
          AND p_brand <> 'Brand#3' AND p_type <> 'PROMO'
          AND p_size IN (1, 9, 14, 19, 23, 36, 45, 49)
@@ -542,6 +543,8 @@ object TpchQueries {
                                   WHERE s_acctbal < 0)
        GROUP BY p_brand, p_type, p_size
        ORDER BY supplier_cnt DESC, p_brand, p_type, p_size"""
+
+  private val q16Sql = q16Text("DISTINCT l_partkey, l_suppkey")
 
   /** The Spark-side Q16 text (round 18): the derived table's DISTINCT
     * deduplicated (l_partkey, l_suppkey) over the FULL fact table — a
@@ -557,17 +560,7 @@ object TpchQueries {
     * hashpartitioning(l_partkey, l_suppkey) disappearing). The
     * null-aware anti-join rung stays exercised; DuckDB still replays
     * [[q16Sql]] verbatim. */
-  private val q16SparkSql =
-    """SELECT p_brand, p_type, p_size,
-              count(DISTINCT ps.l_suppkey) AS supplier_cnt
-       FROM (SELECT l_partkey, l_suppkey FROM lineitem) ps, part
-       WHERE p_partkey = ps.l_partkey
-         AND p_brand <> 'Brand#3' AND p_type <> 'PROMO'
-         AND p_size IN (1, 9, 14, 19, 23, 36, 45, 49)
-         AND ps.l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-                                  WHERE s_acctbal < 0)
-       GROUP BY p_brand, p_type, p_size
-       ORDER BY supplier_cnt DESC, p_brand, p_type, p_size"""
+  private val q16SparkSql = q16Text("l_partkey, l_suppkey")
 
   /** The Spark-side Q17 plan (round 18; the q11Df precedent): the
     * decorrelated SQL form aggregated the per-part quantity average

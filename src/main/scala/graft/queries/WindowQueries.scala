@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -14,8 +13,7 @@ import graft.Tables
   * global ORDER BY window (a single-partition window is the classic
   * 100 TB deadlock — everything funnels through one task).
   */
-object WindowQueries {
-  type Q = (SparkSession, String) => DataFrame
+object WindowQueries extends QueryModule {
 
   /** W1 ranking family over acctbal within market segment. */
   private val winRank: Q = (s, d) => {

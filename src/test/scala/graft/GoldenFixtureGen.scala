@@ -14,12 +14,7 @@ object GoldenFixtureGen {
   val resourcePath = "src/test/resources/listings_raw_golden.parquet"
 
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("4").getOrCreate()
     val tmp = Files.createTempDirectory("graft-golden").toString + "/out"
     ListingsFixture.raw(spark).coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = Files.list(Paths.get(tmp)).toArray.map(_.toString)

@@ -199,29 +199,34 @@ class PlanHygieneSpec extends SparkSpec {
     // same bounded ~2.4k-row calendar-day grid
     "q_holt_winters", "q_ransac_line")
 
+  /** Every query's initial plan, built once and shared by the three
+    * whole-surface checks below: (name, plan text, the plan's
+    * partition-less window findings). */
+  private lazy val surface: Seq[(String, String, Seq[graft.scale.PlanAudit.Finding])] =
+    SparkEntry.queries.toSeq.map { case (name, fn) =>
+      val df = fn(spark, sf)
+      val plan = df.queryExecution.executedPlan.toString
+      val windows = graft.scale.PlanAudit.scan(plan, df.schema.length,
+        allow = Set("cartesian", "bnl", "widescan"))
+      (name, plan, windows.filter(_.kind == "globalwindow"))
+    }
+
   test("partition-less WindowExec appears only on bounded-grain inputs") {
-    import graft.scale.PlanAudit
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (!globalWindowAllowed(name)) {
-        val fs = PlanAudit.findings(fn(spark, sf),
-          allow = Set("cartesian", "bnl", "widescan"))
-          .filter(_.kind == "globalwindow")
+    surface.foreach { case (name, _, fs) =>
+      if (!globalWindowAllowed(name))
         assert(fs.isEmpty, s"$name plans a partition-less window: $fs")
-      }
     }
   }
 
   test("no query plans a CartesianProduct") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val plan = fn(spark, sf).queryExecution.executedPlan.toString
+    surface.foreach { case (name, plan, _) =>
       assert(!plan.contains("CartesianProduct"),
         s"$name plans a CartesianProduct:\n$plan")
     }
   }
 
   test("BroadcastNestedLoopJoin appears only where intended") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val plan = fn(spark, sf).queryExecution.executedPlan.toString
+    surface.foreach { case (name, plan, _) =>
       if (!bnlAllowed(name)) {
         assert(!plan.contains("BroadcastNestedLoopJoin"),
           s"$name unexpectedly plans BroadcastNestedLoopJoin:\n$plan")

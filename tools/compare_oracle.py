@@ -1,10 +1,11 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's t2 correctness gate.
 
-Runs after `graft.Verify` has dumped each query's result parquet +
-oracle_sql.json: executes every oracle SQL in DuckDB against the same
-test tables, then compares schema (sorted column names), row count, and
-a hash of the value matrix (columns sorted by name, rows sorted).
+Runs after `graft.Verify` has dumped each query's result parquet,
+oracle_sql.json and no_oracle.json: executes every oracle SQL in DuckDB
+against the same test tables, then compares schema (sorted column
+names), row count, and a hash of the value matrix (columns sorted by
+name, rows sorted).
 
 Usage: python3 tools/compare_oracle.py <sfDir> <verifyOutDir>
 """
@@ -98,26 +99,18 @@ def main(sf_dir, out_dir):
     # structural-hole guard (round-12 lesson: q_cvm/q_energy_distance
     # shipped with result dumps but no oracle key and the gate stayed
     # green): any dumped result whose query has no oracle entry FAILS
-    # unless it is on the reviewed intentionally-oracle-free list
-    # (approximate/seeded operators whose correctness is pinned by
-    # error-bound/recall ✓o twins or ScalaTest specs instead).
-    NO_ORACLE_OK = {
-        "q_agg_approx_distinct", "q_bpe_encode", "q_bpe_merges",
-        "q_cluster_cap", "q_compression_ratio", "q_dedup_minhash",
-        "q_dedup_minhash_mllib", "q_dedup_simhash", "q_doc_fingerprint",
-        "q_doc_winnow", "q_knn_batch_ivf", "q_knn_ivf", "q_knn_ivf_pq",
-        "q_knn_ivf_opq",
-        "q_knn_lsh", "q_knn_lsh_multi", "q_pca_project",
-        "q_quantiles_approx",
-    }
+    # unless its module declares why it has none (Verify writes those
+    # reasons to no_oracle.json: approximate/seeded operators whose
+    # correctness is pinned by error-bound/recall twins or specs).
     if not only_present:
+        no_oracle = json.load(open(os.path.join(out_dir, "no_oracle.json")))
         dumped = {os.path.basename(p) for p in
                   glob.glob(os.path.join(out_dir, "q_*"))
                   if glob.glob(os.path.join(p, "*.parquet"))}
-        unverified = sorted(dumped - set(oracle) - NO_ORACLE_OK)
+        unverified = sorted(dumped - set(oracle) - set(no_oracle))
         for name in unverified:
             print(f"FAIL {name}: result dumped but no oracle entry "
-                  f"(add oracleSql or list it in NO_ORACLE_OK)")
+                  f"(add it to its module's oracles or noOracle)")
             n_fail += 1
     print(f"== {n_pass} pass / {n_fail} fail ==")
     return 1 if n_fail else 0
