@@ -93,7 +93,7 @@ object ScaleGrowthBench {
     copies.reduce(_ unionByName _).coalesce(cpus.toInt.min(16))
       .write.parquet(s"$bigDir/documents.parquet")
     val nBase = base.count()
-    val nBig = spark.read.parquet(s"$bigDir/documents.parquet").count()
+    val nBig = Tables.documents(spark, bigDir).count()
     require(nBig == factor * nBase,
       s"synthesized corpus has $nBig rows, expected ${factor * nBase} — id collision?")
 

@@ -50,12 +50,7 @@ object CorpusLayout {
     spark.read.option("basePath", path).parquet(path)
 
   private val layouts =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), String]()
-
-  private def layoutKey(d: String): (String, Long, Long) = {
-    val f = new java.io.File(s"$d/documents.parquet")
-    (d, f.lastModified(), f.length())
-  }
+    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
 
   /** Test seam: forget materialized layouts so the next call must go
     * through the on-disk artifact check (or rewrite). */
@@ -67,22 +62,21 @@ object CorpusLayout {
     * in a real deployment the corpus is LANDED partitioned and this
     * step doesn't exist; here it derives the layout from the driver's
     * flat parquet so pruned-vs-flat scans are benchmarkable
-    * side-by-side. Keyed by (dir, mtime, size) so a regenerated data
-    * drop invalidates; the on-disk artifact survives JVM restarts. */
+    * side-by-side. Keyed by (dir, [[graft.Tables.version]]) so a
+    * regenerated data drop invalidates; the on-disk artifact survives
+    * JVM restarts. */
   def ensureLayout(spark: SparkSession, dir: String): String =
-    layouts.computeIfAbsent(layoutKey(dir), key => {
+    layouts.computeIfAbsent((dir, graft.Tables.version(spark, dir, "documents")), key => {
       val root = spark.conf.getOption("spark.graft.corpus.layoutDir")
         .getOrElse(new java.io.File(
           System.getProperty("java.io.tmpdir"), "graft-corpus-bylang").toString)
-      val dirHash = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(key._1.getBytes("UTF-8"))
-        .take(12).map(b => f"$b%02x").mkString
-      val path = s"$root/bylang-$dirHash-${key._2}-${key._3}"
+      val dirHash = graft.Tables.digest(key._1)
+      val path = s"$root/bylang-$dirHash-${key._2}"
       // _SUCCESS marks a completed write; a half-written layout (e.g. a
       // crashed job) fails the check and is rewritten
       if (!new java.io.File(s"$path/_SUCCESS").exists())
         repartitionedWrite(
-          spark.read.parquet(s"$dir/documents.parquet"), path,
+          graft.Tables.documents(spark, dir), path,
           filesPerLang = spark.sparkContext.defaultParallelism)
       path
     })

@@ -359,13 +359,11 @@ object CurationQueries extends QueryModule {
     * is trained once per corpus drop offline, never inside every encode
     * job. */
   private val bpeCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Long), Seq[(Int, String, String, Long)]]()
+    (String, String), Seq[(Int, String, String, Long)]]()
 
-  private[graft] def trainedBpe(s: SparkSession, d: String): Seq[(Int, String, String, Long)] = {
-    val f = new java.io.File(s"$d/documents.parquet")
-    bpeCache.computeIfAbsent((d, f.lastModified(), f.length()),
+  private[graft] def trainedBpe(s: SparkSession, d: String): Seq[(Int, String, String, Long)] =
+    bpeCache.computeIfAbsent((d, Tables.version(s, d, "documents")),
       _ => trainBpeDict(Tables.documents(s, d), 10))
-  }
 
   /** 10 training rounds over the documents corpus via the dict path
     * (uncached — the TRAINING cost is the measured quantity; encode

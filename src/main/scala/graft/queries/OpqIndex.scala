@@ -38,14 +38,12 @@ object OpqIndex {
   /** rotation(i) = the i-th row of R; x' = R·x. */
   type Rotation = Array[Array[Double]]
 
-  private val rotCache = new ConcurrentHashMap[(String, Long, Long), Rotation]()
+  private val rotCache = new ConcurrentHashMap[(String, String), Rotation]()
   private val bookCache =
-    new ConcurrentHashMap[(String, Long, Long), PqIndex.Codebooks]()
+    new ConcurrentHashMap[(String, String), PqIndex.Codebooks]()
 
-  private def cacheKey(d: String): (String, Long, Long) = {
-    val f = new File(s"$d/embeddings.parquet")
-    (d, f.lastModified(), f.length())
-  }
+  private def cacheKey(s: SparkSession, d: String): (String, String) =
+    (d, Tables.version(s, d, "embeddings"))
 
   /** Test seam: forget fitted artifacts so the next build must go
     * through the disk artifact (or refit). */
@@ -53,19 +51,17 @@ object OpqIndex {
     rotCache.clear(); bookCache.clear()
   }
 
-  private def artifactPath(s: SparkSession, key: (String, Long, Long),
+  private def artifactPath(s: SparkSession, key: (String, String),
       kind: String): String = {
     val root = s.conf.getOption("spark.graft.ivf.indexDir").getOrElse(
       new File(System.getProperty("java.io.tmpdir"), "graft-ivf-index").toString)
-    val dirHash = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(key._1.getBytes("UTF-8"))
-      .take(12).map(b => f"$b%02x").mkString
+    val dirHash = Tables.digest(key._1)
     s"$root/$kind-m${PqIndex.numSub}-k${PqIndex.numCodes}" +
-      s"-$dirHash-${key._2}-${key._3}.txt"
+      s"-$dirHash-${key._2}.txt"
   }
 
   def rotation(s: SparkSession, d: String): Rotation =
-    rotCache.computeIfAbsent(cacheKey(d), key => {
+    rotCache.computeIfAbsent(cacheKey(s, d), key => {
       val p = artifactPath(s, key, "opq-rot")
       loadMatrix(p, 64, 64).getOrElse {
         val r = fitRotation(s, d)
@@ -75,7 +71,7 @@ object OpqIndex {
     })
 
   def codebooks(s: SparkSession, d: String): PqIndex.Codebooks =
-    bookCache.computeIfAbsent(cacheKey(d), key => {
+    bookCache.computeIfAbsent(cacheKey(s, d), key => {
       val p = artifactPath(s, key, "opq-books")
       loadBooks(p).getOrElse {
         val books = fitBooks(s, d, rotation(s, d))

@@ -49,31 +49,24 @@ object PqIndex {
   /** codebooks(m)(k) = the k-th centroid of subspace m (subDim doubles). */
   type Codebooks = Array[Array[Array[Double]]]
 
-  private val cache = new ConcurrentHashMap[(String, Long, Long), Codebooks]()
-
-  private def cacheKey(d: String): (String, Long, Long) = {
-    val f = new File(s"$d/embeddings.parquet")
-    (d, f.lastModified(), f.length())
-  }
+  private val cache = new ConcurrentHashMap[(String, String), Codebooks]()
 
   /** Test seam: forget fitted codebooks so the next build must go
     * through the disk artifact (or refit). */
   private[graft] def clearMemoryCache(): Unit = cache.clear()
 
   /** Artifact path: same root as the IVF quantizer index, sha-256 dir
-    * identity + (mtime, size) version in the clear (same rationale as
+    * identity + data version (same rationale as
     * [[SimilarityQueries.buildIvfIndex]]'s path scheme). */
-  private def artifactPath(s: SparkSession, key: (String, Long, Long)): String = {
+  private def artifactPath(s: SparkSession, key: (String, String)): String = {
     val root = s.conf.getOption("spark.graft.ivf.indexDir").getOrElse(
       new File(System.getProperty("java.io.tmpdir"), "graft-ivf-index").toString)
-    val dirHash = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(key._1.getBytes("UTF-8"))
-      .take(12).map(b => f"$b%02x").mkString
-    s"$root/pq-m$numSub-k$numCodes-$dirHash-${key._2}-${key._3}.txt"
+    val dirHash = Tables.digest(key._1)
+    s"$root/pq-m$numSub-k$numCodes-$dirHash-${key._2}.txt"
   }
 
   def codebooks(s: SparkSession, d: String): Codebooks =
-    cache.computeIfAbsent(cacheKey(d), key => {
+    cache.computeIfAbsent((d, Tables.version(s, d, "embeddings")), key => {
       val p = artifactPath(s, key)
       load(p).getOrElse {
         val books = fit(s, d)

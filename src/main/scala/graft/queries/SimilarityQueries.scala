@@ -771,37 +771,29 @@ object SimilarityQueries extends QueryModule {
     * re-running KMeans — the cold-start path a real deployment runs.
     * Artifacts live under `spark.graft.ivf.indexDir` (default: a
     * `graft-ivf-index` dir under java.io.tmpdir), one directory per
-    * dataset VERSION: the key folds in the source file's (mtime, size),
+    * dataset VERSION: the key folds in the table's [[Tables.version]],
     * so a dataset regenerated in place gets a fresh quantizer rather
     * than stale centroids — the same invalidation a production index
     * build keys on a data-version id. */
   private val ivfIndex =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), org.apache.spark.ml.clustering.KMeansModel]()
-
-  private def ivfKey(d: String): (String, Long, Long) = {
-    val f = new java.io.File(s"$d/embeddings.parquet")
-    (d, f.lastModified(), f.length())
-  }
+    new java.util.concurrent.ConcurrentHashMap[(String, String), org.apache.spark.ml.clustering.KMeansModel]()
 
   /** Test seam: forget fitted quantizers so the next build must go
     * through the disk artifact (or refit). */
   private[graft] def clearIvfMemoryCache(): Unit = ivfIndex.clear()
 
-  private def ivfIndexPath(s: SparkSession, key: (String, Long, Long)): String = {
+  private def ivfIndexPath(s: SparkSession, key: (String, String)): String = {
     val root = s.conf.getOption("spark.graft.ivf.indexDir").getOrElse(
       new java.io.File(System.getProperty("java.io.tmpdir"), "graft-ivf-index").toString)
     // dir identity via sha-256 (paths contain separators; a 32-bit
     // hashCode collision would silently cold-load ANOTHER dataset's
-    // centroids — worse than a refit); version via (mtime, size) in
-    // the clear so stale artifacts are inspectable
-    val dirHash = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(key._1.getBytes("UTF-8"))
-      .take(12).map(b => f"$b%02x").mkString
-    s"$root/ivf-k$nCells-$dirHash-${key._2}-${key._3}"
+    // centroids — worse than a refit), then the data version
+    val dirHash = Tables.digest(key._1)
+    s"$root/ivf-k$nCells-$dirHash-${key._2}"
   }
 
   def buildIvfIndex(s: SparkSession, d: String): org.apache.spark.ml.clustering.KMeansModel =
-    ivfIndex.computeIfAbsent(ivfKey(d), key => {
+    ivfIndex.computeIfAbsent((d, Tables.version(s, d, "embeddings")), key => {
       import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
       import org.apache.spark.ml.functions.array_to_vector
       val path = ivfIndexPath(s, key)
