@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -21,6 +22,14 @@ import graft.Tables
   * equal to round(sum(o_totalprice), 2) because the per-day double-sum
   * error in either engine is orders of magnitude below the half-cent
   * rounding grain.
+  *
+  * [[indexed]] is the one day index of the grid: `rk`, the 1-based day
+  * order. It is a plain partition-less `row_number` window, which is
+  * safe here because the grid is bounded by the calendar, not by the
+  * data — one task numbers ≤2 399 rows at any SF. Data-sized inputs
+  * are numbered by [[ScaledWindow.rankCum]] instead. The index is a
+  * pure function of the grid, so a plan recomputed after its caches
+  * are dropped numbers every day the same way.
   */
 private[queries] object OrdersDaily {
   private def grid(s: SparkSession, d: String): DataFrame =
@@ -38,6 +47,11 @@ private[queries] object OrdersDaily {
   /** day, cnt, v (exact long cents). */
   def withCnt(s: SparkSession, d: String): DataFrame =
     grid(s, d).select("day", "cnt", "v")
+
+  /** day, cnt, v (exact long cents), rk (1-based day order, long). */
+  def indexed(s: SparkSession, d: String): DataFrame =
+    withCnt(s, d)
+      .withColumn("rk", row_number().over(Window.orderBy("day")).cast("long"))
 
   /** day, v (revenue dollars rounded to 2 decimals, double). */
   def dollars(s: SparkSession, d: String): DataFrame =

@@ -24,6 +24,9 @@ import graft.Tables
   * Scale notes:
   *  - data-sized global ranks go through [[ScaledWindow.rankCum]]
   *    (two-pass partition-offset; no partition-less WindowExec);
+  *  - the calendar-day grid is numbered once, by
+  *    [[OrdersDaily.indexed]]: a plain window, safe because the grid
+  *    is bounded by the calendar, not the data;
   *  - the trend estimators pair ONLY the calendar-day grid (bounded by
   *    the time range, not the data volume: 2 399 days at every SF), a
   *    reviewed broadcast nested-loop;
@@ -63,12 +66,12 @@ object StatQueries extends QueryModule {
     * onto the calendar-bounded grid (broadcast, grid-sized work), the
     * refit one exact aggregate. */
   private val ransacLine: Q = (s, d) => {
-    // the day-index rank rides the bounded ~2.4k-row calendar grid
-    // (the q_ses_forecast/q_holt_winters window class, allow-listed);
-    // n/Σv are two bounded driver scalars off the same cached grid
-    val grid = CacheRegistry.register(dailyCents(s, d)
-      .select(row_number().over(Window.orderBy("day")).cast("long").as("t"),
-        col("v")).persist())
+    // the day index (OrdersDaily.indexed) rides the bounded ~2.4k-row
+    // calendar grid (the q_ses_forecast/q_holt_winters window class,
+    // allow-listed); n/Σv are two bounded driver scalars off the same
+    // cached grid
+    val grid = CacheRegistry.register(OrdersDaily.indexed(s, d)
+      .select(col("rk").as("t"), col("v")).persist())
     val head = grid.agg(count(lit(1)).as("n"), sum("v").as("sv")).head()
     val n = head.getLong(0)
     val sv = head.getLong(1)
@@ -383,10 +386,7 @@ object StatQueries extends QueryModule {
     * exactly. */
   private val quantileReg: Q = (s, d) => {
     val tau = 0.9
-    val grid = dailyCents(s, d)
-      .withColumn("t", row_number().over(Window.orderBy("day"))
-        .cast("long"))
-      .select(col("t"), col("v"))
+    val grid = OrdersDaily.indexed(s, d).select(col("rk").as("t"), col("v"))
     // ONE partition: the grid is ≤2 399 rows and feeds nine global
     // aggregates — at 32 partitions each round pays a 32-task stage +
     // exchange; single-partition, each round is one ~ms task
@@ -1236,11 +1236,33 @@ object StatQueries extends QueryModule {
       round((ssAB / (col("ka") - 1)) / mse, 4).as("f_interaction"))
   }
 
+  /** The stage-1 daily-revenue trend fit of [[cooksDistance]],
+    * [[breuschPagan]] and [[resetTest]]: `base` (`rk`, `v` in cents)
+    * crossed with its 1-row Cramer fit over five exact int128 moment
+    * sums (`n`, `sx`, `sy`, `sxx`, `sxy`; the granger protocol), plus
+    * the `b1`/`b0` coefficient columns. */
+  private def trendFit(base: DataFrame): DataFrame = {
+    val fit = base.agg(count(lit(1)).as("n"),
+      sum(col("rk").cast(dec)).as("sx"),
+      sum(col("v").cast(dec)).as("sy"),
+      sum(col("rk").cast(dec) * col("rk")).as("sxx"),
+      sum(col("rk").cast(dec) * col("v")).as("sxy"))
+    base.crossJoin(broadcast(fit))
+      .withColumn("b1",
+        (col("n").cast(dec) * col("sxy") - col("sx") * col("sy"))
+          .cast("double") /
+          (col("n").cast(dec) * col("sxx") - col("sx") * col("sx"))
+            .cast("double"))
+      .withColumn("b0",
+        (col("sy").cast("double") - col("b1") * col("sx").cast("double"))
+          / col("n"))
+  }
+
   /** Cook's distance / leverage screen on the daily-revenue trend fit
     * — the influence diagnostic that completes the regression family
     * next to [[vif]]/durbin_watson: which single days, if dropped,
     * would move the fitted trend the most? Simple regression of daily
-    * revenue (cents) on the [[ScaledWindow.rankCum]] day index gives
+    * revenue (cents) on the [[OrdersDaily.indexed]] day index gives
     * the closed forms h_i = 1/n + (x_i−x̄)²/Sxx and
     * D_i = e_i²h_i / (p·s²·(1−h_i)²), p = 2, s² = RSS/(n−2).
     * Exactness: the OLS fit is Cramer over five int128 moment sums
@@ -1251,23 +1273,8 @@ object StatQueries extends QueryModule {
     * day grid is calendar-bounded (2 399 rows at every SF) — the
     * 1-row fit broadcast is the only join. */
   private val cooksDistance: Q = (s, d) => {
-    val daily = dailyCents(s, d)
-    val rnk = ScaledWindow.rankCum(daily, Seq(col("day").asc), None)
-    val base = rnk.df.select(col("day"), col("rk"), col("v"))
-    val fit = base.agg(count(lit(1)).as("n"),
-      sum(col("rk").cast(dec)).as("sx"),
-      sum(col("v").cast(dec)).as("sy"),
-      sum(col("rk").cast(dec) * col("rk")).as("sxx"),
-      sum(col("rk").cast(dec) * col("v")).as("sxy"))
-    val b1 = (col("n").cast(dec) * col("sxy") - col("sx") * col("sy"))
-      .cast("double") /
-      (col("n").cast(dec) * col("sxx") - col("sx") * col("sx"))
-        .cast("double")
-    val withFit = base.crossJoin(broadcast(fit))
-      .withColumn("b1", b1)
-      .withColumn("b0",
-        (col("sy").cast("double") - col("b1") * col("sx").cast("double"))
-          / col("n"))
+    val withFit = trendFit(OrdersDaily.indexed(s, d)
+        .select(col("day"), col("rk"), col("v")))
       .withColumn("e",
         round(col("v") - (col("b0") + col("b1") * col("rk")))
           .cast("long"))
@@ -1296,30 +1303,14 @@ object StatQueries extends QueryModule {
     * (and every OLS standard error) can be trusted as ONE number:
     * regress the squared residuals on the regressor; LM = n·R² ~ χ²(1)
     * under homoscedasticity (the Koenker studentized form, robust to
-    * non-normal errors). Stage 1 is [[cooksDistance]]'s Cramer fit
-    * verbatim; residuals micro-round to integer DOLLARS before
-    * squaring (the q_arch_lm headroom rule: cents⁴ sums approach the
+    * non-normal errors). Stage 1 is the shared [[trendFit]];
+    * residuals micro-round to integer DOLLARS before squaring (the
+    * q_arch_lm headroom rule: cents⁴ sums approach the
     * 38-digit DECIMAL ceiling at sf1); stage 2's moment sums over
     * (rk, e²) are exact int128 with R² a mirrored double at emission.
     * Day-grid bounded, two aggregates + a 1-row broadcast. */
   private val breuschPagan: Q = (s, d) => {
-    val daily = dailyCents(s, d)
-    val rnk = ScaledWindow.rankCum(daily, Seq(col("day").asc), None)
-    val base = rnk.df.select(col("rk"), col("v"))
-    val fit = base.agg(count(lit(1)).as("n"),
-      sum(col("rk").cast(dec)).as("sx"),
-      sum(col("v").cast(dec)).as("sy"),
-      sum(col("rk").cast(dec) * col("rk")).as("sxx"),
-      sum(col("rk").cast(dec) * col("v")).as("sxy"))
-    val b1 = (col("n").cast(dec) * col("sxy") - col("sx") * col("sy"))
-      .cast("double") /
-      (col("n").cast(dec) * col("sxx") - col("sx") * col("sx"))
-        .cast("double")
-    val e2 = base.crossJoin(broadcast(fit))
-      .withColumn("b1", b1)
-      .withColumn("b0",
-        (col("sy").cast("double") - col("b1") * col("sx").cast("double"))
-          / col("n"))
+    val e2 = trendFit(OrdersDaily.indexed(s, d).select(col("rk"), col("v")))
       .select(col("rk"),
         round((col("v") - (col("b0") + col("b1") * col("rk"))) / 100)
           .cast("long").as("e"))
@@ -1353,24 +1344,8 @@ object StatQueries extends QueryModule {
     * Σ(ŷ²)² past DECIMAL(38,0) at sf1), so every stage-2 sum is an
     * exact int128 and the F emission is mirrored doubles. */
   private val resetTest: Q = (s, d) => {
-    val daily = dailyCents(s, d)
-    val rnk = ScaledWindow.rankCum(daily, Seq(col("day").asc), None)
-    val base = rnk.df.select(col("rk"), col("v"))
-    val fit = base.agg(count(lit(1)).as("n"),
-      sum(col("rk").cast(dec)).as("sx"),
-      sum(col("v").cast(dec)).as("sy"),
-      sum(col("rk").cast(dec) * col("rk")).as("sxx"),
-      sum(col("rk").cast(dec) * col("v")).as("sxy"))
-    val b1c = (col("n").cast(dec) * col("sxy") - col("sx") * col("sy"))
-      .cast("double") /
-      (col("n").cast(dec) * col("sxx") - col("sx") * col("sx"))
-        .cast("double")
     // z = round(ŷ/100)² — dollars², an exact long per row
-    val zed = base.crossJoin(broadcast(fit))
-      .withColumn("b1", b1c)
-      .withColumn("b0",
-        (col("sy").cast("double") - col("b1") * col("sx").cast("double"))
-          / col("n"))
+    val zed = trendFit(OrdersDaily.indexed(s, d).select(col("rk"), col("v")))
       .withColumn("yhd",
         round((col("b0") + col("b1") * col("rk")) / 100).cast("long"))
       .select(col("rk"), col("v"),
@@ -2359,11 +2334,9 @@ object StatQueries extends QueryModule {
     * every RSS/F expression is a mirrored double. Asymptotic
     * F(2, ∞) 5% critical 3.0. */
   private val chow: Q = (s, d) => {
-    val rnk = ScaledWindow.rankCum(dailyCents(s, d),
-      Seq(col("day").asc), None)
-    val half = rnk.n / 2
-    val t = rnk.df.select(col("rk").cast("long").as("x"), col("v").as("y"),
-      (col("rk") <= half).as("s1"))
+    val half = dailyCents(s, d).count() / 2
+    val t = OrdersDaily.indexed(s, d).select(col("rk").as("x"),
+      col("v").as("y"), (col("rk") <= half).as("s1"))
     def seg(flag: Column, c: Column) = sum(when(flag, c).otherwise(lit(0L).cast(dec)))
     val a = t.agg(
       count(lit(1)).as("n"),

@@ -1,0 +1,46 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+
+import graft.queries.CacheRegistry
+
+/** A result depends only on the data and the query, not on which
+  * caches are still resident when the query runs: building a query,
+  * dropping every registered query-internal persist, then collecting
+  * must give the same rows as building and collecting directly.
+  *
+  * The queries below number the calendar-day grid. Each used to index
+  * it through `ScaledWindow.rankCum`, whose per-partition offsets are
+  * collected at build time; once its stamped cache was dropped, the
+  * re-sampled range partitioning moved rows between partitions and
+  * the offsets landed on the wrong days. They now read
+  * `OrdersDaily.indexed`, a plain window over the bounded grid. */
+class CacheResidencySpec extends SparkSpec {
+
+  private val dayGridQueries = Seq(
+    "q_haar", "q_sax", "q_hurst_rs", "q_ccf", "q_granger",
+    "q_engle_granger", "q_adf_drift", "q_durbin_watson", "q_arch_lm",
+    "q_cooks_distance", "q_breusch_pagan", "q_reset", "q_chow",
+    "q_runs_test")
+
+  // rankCum's range sampler seeds from the RDD id, which a recompute
+  // changes; at sf0.001 every grid partition is smaller than its
+  // sample and is taken whole, so the bounds could not move there.
+  // sf0.01 is the smallest test size at which they did.
+  private val dir = new java.io.File(sf).toPath.resolveSibling("sf0.01").toString
+
+  // string form: a NaN cell compares equal to itself
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq
+
+  dayGridQueries.foreach { name =>
+    test(s"$name gives the same rows when its caches are dropped before the run") {
+      val q = SparkEntry.queries(name)
+      val direct = rows(q(spark, dir))
+      CacheRegistry.drain()
+      val built = q(spark, dir)
+      CacheRegistry.drain()
+      assert(rows(built) == direct)
+    }
+  }
+}

@@ -196,8 +196,12 @@ class PlanHygieneSpec extends SparkSpec {
     // calendar-day grid (the q_rolling_corr class)
     "q_ses_forecast", "q_quantile_reg",
     // round 15: the Holt-Winters and RANSAC day-index ranks ride the
-    // same bounded ~2.4k-row calendar-day grid
-    "q_holt_winters", "q_ransac_line")
+    // same bounded ~2.4k-row calendar-day grid; so does every other
+    // consumer of the one day index, OrdersDaily.indexed
+    "q_holt_winters", "q_ransac_line",
+    "q_haar", "q_sax", "q_hurst_rs", "q_ccf", "q_granger",
+    "q_engle_granger", "q_adf_drift", "q_durbin_watson", "q_arch_lm",
+    "q_cooks_distance", "q_breusch_pagan", "q_reset", "q_chow")
 
   /** Every query's initial plan, built once and shared by the three
     * whole-surface checks below: (name, plan text, the plan's
