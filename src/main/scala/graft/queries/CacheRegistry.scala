@@ -4,11 +4,11 @@ import org.apache.spark.sql.DataFrame
 
 /** Session-lifetime guard for query-internal persists.
   *
-  * Several builders persist an intermediate that must stay cached
-  * between query CONSTRUCTION (a bounded pass-1 collect) and query
-  * EXECUTION (the caller materializing the returned DataFrame) —
-  * [[ScaledWindow.rankCum]]'s range-stamped input, link-prediction's
-  * shared adjacency. The builder cannot unpersist in a finally block
+  * Several builders persist an intermediate that several branches of
+  * the returned plan read — link-prediction's shared adjacency, the
+  * per-round frontiers of the iterative graph queries — or that a
+  * bounded build-time collect reads before the caller materializes the
+  * returned DataFrame. The builder cannot unpersist in a finally block
   * without discarding the cache before the caller ever runs the plan,
   * so instead each such persist is REGISTERED here and the harness
   * (Verify / Bench / specs) drains the registry once the query's

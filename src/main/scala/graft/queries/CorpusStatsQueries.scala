@@ -412,14 +412,13 @@ object CorpusStatsQueries extends QueryModule {
     * as covar_pop/var_pop on both engines (the q_agg_corr precedent),
     * deterministic rank ties broken by word. */
   private val zipfSlope: Q = (s, d) => {
-    // round 11: the top-1000 head via ScaledWindow.rankCum's two-pass
-    // partition-offset rank - the full-vocabulary row_number it
-    // replaces was the one data-sized single-partition stage here
+    // the top-1000 head via ScaledWindow.rankCum's bucketed rank - the
+    // full-vocabulary row_number it replaces was the one data-sized
+    // single-partition stage here
     val counted = Tables.documents(s, d)
       .select(explode(split(col("text"), " ")).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n"))
-    ScaledWindow.rankCum(counted,
-      Seq(col("n").desc, col("word").asc), None)
+    ScaledWindow.rankCum(counted, Seq(col("n").desc, col("word").asc))
       .df
       .filter(col("rk") <= 1000)
       .select(log(col("rk").cast("double")).as("lx"),

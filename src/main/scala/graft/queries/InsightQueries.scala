@@ -323,15 +323,14 @@ object InsightQueries extends QueryModule {
     * statistic is tie-safe by construction. Single row out.
     *
     * Scale note: the global rank runs through
-    * [[ScaledWindow.rankCum]]'s two-pass partition-offset form — no
-    * single-partition WindowExec even when the customer dimension is
-    * itself huge; ranks come from parallel range-slice windows plus
-    * broadcast offsets. */
+    * [[ScaledWindow.rankCum]] — no single-partition WindowExec even
+    * when the customer dimension is itself huge; ranks come from
+    * parallel per-bucket windows plus in-plan bucket offsets. */
   private val gini: Q = (s, d) => {
     val rev = Tables.orders(s, d)
       .groupBy("o_custkey")
       .agg(round(sum("o_totalprice"), 2).as("r"))
-    ScaledWindow.rankCum(rev, Seq(col("r").asc, col("o_custkey").asc), None)
+    ScaledWindow.rankCum(rev, Seq(col("r").asc, col("o_custkey").asc))
       .df
       .agg(count(lit(1)).as("n"),
         round(sum("r"), 2).as("total_rev"),
@@ -391,14 +390,14 @@ object InsightQueries extends QueryModule {
     val w = Window.orderBy("decile")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     rnk.df
-      .withColumn("decile", expr(s"((rk - 1) * 10) DIV ${n}L") + 1)
+      .withColumn("decile", call_function("div", (col("rk") - 1) * 10, n) + 1)
       .groupBy("decile")
       .agg(count(lit(1)).as("n_customers"), sum("r").as("rc"))
       .withColumn("rev_usd", round(col("rc") / lit(100.0), 2))
       .withColumn("pop_share_cum",
-        round(sum(col("n_customers")).over(w) / lit(n.toDouble), 6))
+        round(sum(col("n_customers")).over(w) / n.cast("double"), 6))
       .withColumn("rev_share_cum",
-        round(sum(col("rc")).over(w) / lit(total.toDouble), 6))
+        round(sum(col("rc")).over(w) / total.cast("double"), 6))
       .select("decile", "n_customers", "rev_usd", "pop_share_cum",
         "rev_share_cum")
       .orderBy("decile")
@@ -529,10 +528,9 @@ object InsightQueries extends QueryModule {
     *
     * Scale note: the fact table collapses to per-part revenue (one
     * map-side-combined shuffle), then the global running total comes
-    * from [[ScaledWindow.rankCum]]'s two-pass partition-offset form —
-    * exact long arithmetic, no single-partition WindowExec, and the
-    * grand total is the driver-known pass-1 sum (a literal, not a
-    * partition-less `sum().over()`). */
+    * from [[ScaledWindow.rankCum]] — exact long arithmetic, no
+    * single-partition WindowExec, and the grand total is its in-plan
+    * scalar (not a partition-less `sum().over()`). */
   private val abcClass: Q = (s, d) => {
     val rev = Tables.lineitem(s, d)
       .select(col("l_partkey"),
@@ -541,8 +539,8 @@ object InsightQueries extends QueryModule {
       .groupBy("l_partkey")
       .agg(sum("cents").as("rev"))
     val rnk = ScaledWindow.rankCum(rev,
-      Seq(col("rev").desc, col("l_partkey").asc), Some(col("rev")))
-    val total = lit(rnk.total).cast(DecimalType(38, 0))
+      Seq(col("rev").desc, col("l_partkey").asc), Seq("cum" -> col("rev")))
+    val total = rnk.total.cast(DecimalType(38, 0))
     rnk.df
       // boundary test on DECIMAL(38,0): cum*100 as long*long wraps once
       // total revenue passes ~9.2e16 cents (~25 TB lineitem); decimal is
@@ -554,7 +552,7 @@ object InsightQueries extends QueryModule {
       .groupBy("cls")
       .agg(count(lit(1)).as("n_parts"),
         sum("rev").as("class_cents"),
-        round(sum("rev") / lit(rnk.total).cast("double"), 6).as("share"))
+        round(sum("rev") / rnk.total.cast("double"), 6).as("share"))
       .orderBy("cls")
   }
 
@@ -831,22 +829,21 @@ object InsightQueries extends QueryModule {
     // rounded AVG would reintroduce the .xx5 midpoint hazard the
     // seasonalIndex scaladoc documents); the one double division per
     // OUTPUT value is a single deterministic op in both engines
-    // user index via the two-pass partition-offset rank (no
-    // partition-less row_number over the user dimension); n is the
-    // driver-known pass-1 total, a literal instead of count().over()
+    // user index via rankCum (no partition-less row_number over the
+    // user dimension); n is its in-plan scalar, not count().over()
     val ranked = ScaledWindow.rankCum(
       Tables.events(s, d)
         .filter(col("event_type") === "purchase")
         .groupBy("user_id")
         .agg(round(sum("value") * 10000).cast("long").as("mi")),
-      Seq(col("user_id").asc), None)
+      Seq(col("user_id").asc))
     val u = CacheRegistry.register(
       ranked.df.withColumnRenamed("rk", "rn").persist())
     val draws = u.select(col("rn").as("i"))
       .withColumn("b", explode(sequence(lit(1), lit(nB))))
       .withColumn("j",
         conv(substring(md5(concat(col("b"), lit(":"), col("i"))), 1, 8),
-          16, 10).cast("long") % lit(ranked.n) + 1)
+          16, 10).cast("long") % ranked.n + 1)
     val boot = draws
       .join(u.select(col("rn").as("j"), col("mi")), Seq("j"))
       .groupBy("b").agg(sum("mi").as("bs"))
@@ -917,7 +914,7 @@ object InsightQueries extends QueryModule {
     * label/score-agnostic). Shape: one map-side-combined collapse to
     * the DISTINCT-SCORE grain (per score: positive and negative
     * counts), then the negative-count running total through
-    * [[ScaledWindow.rankCum]] — the same two-pass multi-metric ECDF
+    * [[ScaledWindow.rankCum]] — the same multi-metric ECDF
     * machinery as q_ks_test, so no partition-less window over the
     * data-sized score grain. U accumulates in DECIMAL(38,0):
     * 2U = Σᵢ nPᵢ·(2·cumN_{<i} + nNᵢ) is exact integer arithmetic in
@@ -936,8 +933,8 @@ object InsightQueries extends QueryModule {
       .agg(sum(col("np").cast(DecimalType(38, 0))
         * (lit(2) * (col("cumn") - col("nn")) + col("nn"))).as("u2"))
       .select(
-        lit(nPos).as("n_pos"), lit(nNeg).as("n_neg"),
-        round(col("u2").cast("double") / lit(2.0 * nPos * nNeg), 6)
+        nPos.as("n_pos"), nNeg.as("n_neg"),
+        round(col("u2").cast("double") / (lit(2.0) * nPos * nNeg), 6)
           .as("auc"))
   }
 
@@ -948,7 +945,7 @@ object InsightQueries extends QueryModule {
     * is data-sized); the decile cut is EXPLICIT integer arithmetic
     * `((rk−1)·10) DIV n` — not ntile(), whose remainder placement
     * would have to be replicated bit-for-bit — with n and the
-    * conversion total as driver-known pass-1 literals. The final
+    * conversion total as rankCum's in-plan scalars. The final
     * cumulative window runs over the 10-row decile grid. */
   private val liftDeciles: Q = (s, d) => {
     val scored = Tables.orders(s, d).select(
@@ -959,18 +956,18 @@ object InsightQueries extends QueryModule {
       Seq(col("score").desc, col("o_orderkey").asc),
       Seq("cumconv" -> col("conv")))
     val n = rnk.n
-    val baseRate = rnk.totals("cumconv").toDouble / n
+    val nConv = rnk.totals("cumconv").cast("double")
+    val baseRate = nConv / n
     val w = Window.orderBy("decile")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     rnk.df
-      .withColumn("decile", expr(s"((rk - 1) * 10) DIV ${n}L") + 1)
+      .withColumn("decile", call_function("div", (col("rk") - 1) * 10, n) + 1)
       .groupBy("decile")
       .agg(count(lit(1)).as("n"), sum("conv").as("n_conv"))
       .withColumn("conv_rate", round(col("n_conv") / col("n"), 6))
       .withColumn("lift",
-        round((col("n_conv") / col("n")) / lit(baseRate), 6))
-      .withColumn("cum_gain", round(sum("n_conv").over(w)
-        / lit(rnk.totals("cumconv").toDouble), 6))
+        round((col("n_conv") / col("n")) / baseRate, 6))
+      .withColumn("cum_gain", round(sum("n_conv").over(w) / nConv, 6))
       .orderBy("decile")
   }
 

@@ -1123,11 +1123,10 @@ object RelationalQueries extends QueryModule {
     *
     * Scale note: exact KS needs a total order over the value grain —
     * and the value grain (distinct prices) is DATA-SIZED, so both
-    * ECDF cumsums run through [[ScaledWindow.rankCum]]'s two-pass
-    * partition-offset form (its first multi-metric user): parallel
-    * range-slice windows + broadcast offsets, exact long counts, no
-    * single-partition stage. Sample totals are the driver-known
-    * pass-1 sums (literals, not a 1-row cross join). */
+    * ECDF cumsums run through [[ScaledWindow.rankCum]] (its first
+    * multi-metric user): parallel per-bucket windows + in-plan bucket
+    * offsets, exact long counts, no single-partition stage. Sample
+    * totals are its in-plan scalars (not a 1-row cross join). */
   private val ksTest: Q = (s, d) => {
     val o = Tables.orders(s, d).select(col("o_totalprice").as("v"),
       (col("o_custkey") % 2 === 0).as("isa"))
@@ -1140,9 +1139,9 @@ object RelationalQueries extends QueryModule {
     val (na, nb) = (rnk.totals("cuma"), rnk.totals("cumb"))
     rnk.df
       .agg(
-        max(round(abs(col("cuma") / lit(na) - col("cumb") / lit(nb)), 6))
+        max(round(abs(col("cuma") / na - col("cumb") / nb), 6))
           .as("ks_d"))
-      .select(col("ks_d"), lit(na).as("n_a"), lit(nb).as("n_b"))
+      .select(col("ks_d"), na.as("n_a"), nb.as("n_b"))
   }
 
   /** Revenue concentration (Pareto 80/20 report): how many customers
@@ -1151,10 +1150,9 @@ object RelationalQueries extends QueryModule {
     * reviews. The data collapses to the customer grain first (in
     * INTEGER CENTS, so every running total is exact long arithmetic);
     * the cumulative share and rank come from
-    * [[ScaledWindow.rankCum]]'s two-pass partition-offset form — no
-    * single-partition WindowExec even when the customer grain
-    * overwhelms one sort, and the grand totals are the driver-known
-    * pass-1 sums (literals, not partition-less `count/sum().over()`).
+    * [[ScaledWindow.rankCum]] — no single-partition WindowExec even
+    * when the customer grain overwhelms one sort, and the grand totals
+    * are its in-plan scalars (not partition-less `count/sum().over()`).
     * Threshold comparisons use ROUNDED shares of exact integers, so a
     * last-ulp difference cannot flip a membership count. */
   private val paretoRevenue: Q = (s, d) => {
@@ -1162,14 +1160,14 @@ object RelationalQueries extends QueryModule {
       .groupBy("o_custkey")
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("spend"))
     val rnk = ScaledWindow.rankCum(g,
-      Seq(col("spend").desc, col("o_custkey").asc), Some(col("spend")))
+      Seq(col("spend").desc, col("o_custkey").asc), Seq("cum" -> col("spend")))
     rnk.df
-      .withColumn("cum_share", round(col("cum") / lit(rnk.total), 6))
+      .withColumn("cum_share", round(col("cum") / rnk.total, 6))
       .agg(
         sum(when(col("cum_share") < 0.8, 1L).otherwise(0L)).as("n_top80"),
-        round(sum(when(col("rk") * 100 <= lit(rnk.n), col("spend")))
-          / lit(rnk.total), 6).as("top1pct_share"))
-      .select(lit(rnk.n).as("n_customers"), col("n_top80"),
+        round(sum(when(col("rk") * 100 <= rnk.n, col("spend")))
+          / rnk.total, 6).as("top1pct_share"))
+      .select(rnk.n.as("n_customers"), col("n_top80"),
         col("top1pct_share"))
   }
 

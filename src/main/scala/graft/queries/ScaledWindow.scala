@@ -1,30 +1,38 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Descending, NullsLast}
+import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graftshim
+import org.apache.spark.sql.types._
 
-/** Distributed global rank / cumulative sum — the two-pass
-  * partition-offset form of `row_number().over(Window.orderBy(...))`.
+/** Distributed global rank / running sum — the values of
+  * `row_number().over(Window.orderBy(...))` and of an inclusive running
+  * `sum`, as one lazy plan: building it starts no Spark job.
   *
   * A partition-less window moves EVERY row to one task (Spark's own
   * `WindowExec: No Partition Defined` warning); fine on a month grid,
   * fatal on a 100 TB dimension. This helper keeps the same semantics
   * with no single-partition stage:
   *
-  *  1. range-repartition on the sort key (explicit partition count, so
-  *     AQE never re-coalesces and partition ids stay stable) and stamp
-  *     each row with its partition id — partitions now hold disjoint,
-  *     ordered key ranges;
-  *  2. pass 1: per-partition count + sum (map-side combined; the
-  *     driver receives O(partitions) longs, the same bounded-collect
-  *     contract as [[RelationalQueries.selectQuantiles]]);
-  *  3. scanLeft those into per-partition starting rank / starting
-  *     cumsum offsets, broadcast them back;
-  *  4. pass 2: a window PARTITIONED BY partition id (parallel,
-  *     range-slice-sized) plus the broadcast offset = the global
-  *     rank / running total.
+  *  1. bounds: the `parts × perBound` rows with the smallest
+  *     `xxhash64` of their sort key (an exact sample, not a random
+  *     one), sorted, every `perBound`-th key kept; `parts` is the
+  *     session's `spark.sql.shuffle.partitions`;
+  *  2. each row's bucket is the number of bounds ≤ its key (a binary
+  *     search) — a pure function of the row and the data, so buckets
+  *     hold disjoint, ordered key ranges;
+  *  3. one aggregate over the ≤parts bucket rows gives every bucket's
+  *     starting rank and starting sums, and the grand totals;
+  *  4. a window PARTITIONED BY bucket (parallel, range-sized) plus the
+  *     bucket's offset = the global rank / running total.
+  *
+  * Bounds, offsets and totals are scalar subqueries of the returned
+  * plan, and two evaluations of any of them agree. A result therefore
+  * depends on no cache, partition id, exchange reuse or subquery
+  * reuse.
   *
   * The running sum is restricted to INTEGRAL metrics (the repo's
   * integer-cents protocol): long addition is associative, so the
@@ -33,99 +41,108 @@ import org.apache.spark.storage.StorageLevel
   * rounded boundary against the oracle.
   *
   * `sortCols` must totally order the rows (tie-break included), or the
-  * rank is nondeterministic — same contract as any ORDER BY rank.
+  * rank is nondeterministic — same contract as any ORDER BY rank. A
+  * descending sort column must be numeric.
   */
 object ScaledWindow {
 
   /** `df` + `rk` (1-based global rank, long) and one inclusive running
     * sum column (long) per `values` entry, named by its alias; `n` and
-    * `totals` are the driver-known grand totals (use them as literals
-    * instead of a partition-less `count().over()` / `sum().over()`). */
-  final case class Ranked(df: DataFrame, n: Long, totals: Map[String, Long]) {
+    * `totals` are the grand row count and sums as scalar columns (use
+    * them instead of a partition-less `count().over()` / `sum().over()`). */
+  final case class Ranked(df: DataFrame, n: Column, totals: Map[String, Column]) {
     /** The single-metric total (convenience for one-value callers). */
-    def total: Long = totals.values.headOption.getOrElse(0L)
+    def total: Column = totals.values.headOption.getOrElse(lit(0L))
   }
 
-  /** Single-metric form: the running sum lands in a `cum` column. */
-  def rankCum(df: DataFrame, sortCols: Seq[Column],
-      value: Option[Column], numParts: Int): Ranked =
-    rankCum(df, sortCols, value.map("cum" -> _).toSeq, numParts)
+  /** Sampled keys per bucket bound. */
+  private val perBound = 20
 
   def rankCum(df: DataFrame, sortCols: Seq[Column],
-      value: Option[Column]): Ranked =
-    rankCum(df, sortCols, value, -1)
-
-  /** `numParts <= 0` (the default) sizes the range repartition to the
-    * session's `spark.sql.shuffle.partitions` — the cluster-scaled
-    * parallelism knob — instead of a constant; the explicit count
-    * still matters because AQE never coalesces a user-specified
-    * repartition, which is what keeps the stamped partition ids
-    * stable between pass 1 and pass 2. */
-  def rankCum(df: DataFrame, sortCols: Seq[Column],
-      values: Seq[(String, Column)], numParts: Int = -1): Ranked = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val parts =
-      if (numParts > 0) numParts
-      else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // the range partitioner SAMPLES its child to pick boundaries, so an
-    // unpersisted input computes TWICE — once for the sample job, once
-    // for the exchange's map stage (guide §1.2 step 1: don't compute
-    // what you throw away). Persisting the input turns that into one
-    // computation + two cache reads; the registry drains it with the
-    // stamped cache after the query materializes. (round 18)
-    val in = CacheRegistry.register(
-      df.persist(StorageLevel.MEMORY_AND_DISK))
-    // registered with CacheRegistry (not try/finally-released): the
-    // cache must survive past this builder — pass 2 of the returned
-    // plan re-reads it when the CALLER materializes the result — so
-    // the harness drains it after each query instead
-    val stamped = CacheRegistry.register(in
-      .repartitionByRange(parts, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .withColumn("_pid", spark_partition_id())
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    // pass 1: O(partitions × metrics) longs to the driver
-    val stats: Array[(Int, Long, IndexedSeq[Long])] = stamped
-      .groupBy("_pid")
-      .agg(count(lit(1)).as("_c"),
-        values.map { case (a, v) => sum(v.cast("long")).as(s"_s_$a") }: _*)
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1),
-        values.indices.map(i =>
-          if (r.isNullAt(2 + i)) 0L else r.getLong(2 + i))))
-      .sortBy(_._1)
-    val rankOff = stats.map(_._2).scanLeft(0L)(_ + _)
-    val cumOffs: Seq[Array[Long]] = values.indices.map(i =>
-      stats.map(_._3(i)).scanLeft(0L)(_ + _))
-    // offsets ride LITERAL arrays indexed by _pid instead of a
-    // broadcast-joined 32-row frame: O(partitions) longs inline in the
-    // plan, which removes a BroadcastExchange + BroadcastHashJoin stage
-    // from every rankCum consumer (round 18; the same bounded-driver-
-    // state contract as the collect above). Partitions the range split
-    // left empty have no rows, so their zero entries are never read.
-    val roffByPid = new Array[Long](parts)
-    val coffByPid: IndexedSeq[Array[Long]] =
-      values.indices.map(_ => new Array[Long](parts))
-    stats.zipWithIndex.foreach { case ((pid, _, _), i) =>
-      roffByPid(pid) = rankOff(i)
-      values.indices.foreach(j => coffByPid(j)(pid) = cumOffs(j)(i))
-    }
-    // pass 2: windows partitioned by pid run in parallel on range slices
-    val local = Window.partitionBy("_pid").orderBy(sortCols: _*)
-    val frame = local.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = stamped
-      .withColumn("rk", row_number().over(local).cast("long") +
-        element_at(typedlit(roffByPid.toSeq), col("_pid") + 1))
+      values: Seq[(String, Column)] = Nil): Ranked = {
+    val parts = shufflePartitions(df)
+    val keyed = bucketed(df, sortCols)
+    val metrics = "_c" +: values.indices.map(i => s"_s$i")
+    val perBucket = keyed.groupBy("_b").agg(count(lit(1)).as("_c"),
+      values.zipWithIndex.map { case ((_, v), i) =>
+        sum(v.cast("long")).as(s"_s$i") }: _*)
+    // metric m summed over the buckets below b
+    def below(m: String, b: Column) = aggregate(
+      filter(col("a"), x => x("_b") < b), lit(0L),
+      (acc, x) => acc + coalesce(x(m), lit(0L)))
+    val summary = perBucket
+      .agg(array_agg(struct(("_b" +: metrics).map(col): _*)).as("a"))
+      .select(struct(metrics.map(m => struct(
+        below(m, lit(parts)).as("total"),
+        transform(sequence(lit(0), lit(parts - 1)), b => below(m, b))
+          .as("offsets")).as(m)): _*))
+      .scalar()
+    def offset(m: String) =
+      element_at(summary.getField(m).getField("offsets"), col("_b") + 1)
+    val w = Window.partitionBy("_b").orderBy(sortCols: _*)
+    val frame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // an explicit partition count, so AQE never coalesces the buckets
+    // back into one task; which task a bucket lands in does not change
+    // any value
+    val ranked = keyed.repartitionByRange(parts, col("_b"))
+      .withColumn("rk", row_number().over(w).cast("long") + offset("_c"))
     val withCums = values.zipWithIndex.foldLeft(ranked) {
       case (acc, ((alias, v), i)) =>
         acc.withColumn(alias,
-          sum(v.cast("long")).over(frame) +
-            element_at(typedlit(coffByPid(i).toSeq), col("_pid") + 1))
+          sum(v.cast("long")).over(frame) + offset(s"_s$i"))
     }
-    Ranked(withCums.drop("_pid"),
-      n = rankOff.last,
-      totals = values.zipWithIndex
-        .map { case ((a, _), i) => a -> cumOffs(i).last }.toMap)
+    Ranked(withCums.drop("_b"),
+      n = summary.getField("_c").getField("total"),
+      totals = values.zipWithIndex.map { case ((a, _), i) =>
+        a -> summary.getField(s"_s$i").getField("total") }.toMap)
   }
+
+  /** `df` + `_b`, the row's bucket: how many of the sampled bounds are
+    * ≤ its sort key. */
+  private[graft] def bucketed(df: DataFrame, sortCols: Seq[Column]): DataFrame = {
+    val parts = shufflePartitions(df)
+    val key = struct(ascendingKey(df, sortCols): _*)
+    val bounds = df.select(key.as("k"))
+      .orderBy(xxhash64(col("k")), col("k"))
+      .limit(parts * perBound)
+      .agg(sort_array(array_agg(col("k"))).as("s"))
+      .select(filter(col("s"), (_, i) => i > 0 && i % perBound === 0))
+    // a binary search over the ≤ parts−1 sorted bounds: log2(parts)
+    // compiled comparisons a row (a missing bound reads as null, i.e.
+    // above every key), where a `filter` lambda would run one
+    // interpreted comparison per bound
+    def search(lo: Int, hi: Int): Column =
+      if (lo == hi) lit(lo)
+      else {
+        val mid = (lo + hi) / 2
+        when(get(col("_bounds"), lit(mid)) <= key, search(mid + 1, hi))
+          .otherwise(search(lo, mid))
+      }
+    df.withColumn("_bounds", bounds.scalar())
+      .withColumn("_b", search(0, parts - 1))
+      .drop("_bounds")
+  }
+
+  private def shufflePartitions(df: DataFrame): Int =
+    df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+
+  /** Columns whose ascending, nulls-first struct order never contradicts
+    * the order of `sortCols` (ties are allowed: a tie only keeps two
+    * rows in one bucket). */
+  private def ascendingKey(df: DataFrame, sortCols: Seq[Column]): Seq[Column] =
+    (graftshim.analyzedPlan(df.orderBy(sortCols: _*)) match { case s: Sort => s.order })
+      .flatMap { o =>
+        val e = graftshim.toColumn(o.child)
+        val v = if (o.direction != Descending) e else o.child.dataType match {
+          // NaN sorts above +Inf, so descending it comes first
+          case DoubleType | FloatType =>
+            when(isnan(e), lit(Double.NegativeInfinity)).otherwise(-e)
+          case ByteType | ShortType | IntegerType | LongType => bitwise_not(e)
+          case _: DecimalType => -e
+          case t => throw new IllegalArgumentException(
+            s"rankCum: descending sort key ${o.child.sql} must be numeric, not $t")
+        }
+        if (o.child.nullable && o.nullOrdering == NullsLast) Seq(e.isNull, v)
+        else Seq(v)
+      }
 }

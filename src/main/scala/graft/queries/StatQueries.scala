@@ -23,7 +23,7 @@ import graft.Tables
   *
   * Scale notes:
   *  - data-sized global ranks go through [[ScaledWindow.rankCum]]
-  *    (two-pass partition-offset; no partition-less WindowExec);
+  *    (per-bucket windows; no partition-less WindowExec);
   *  - the calendar-day grid is numbered once, by
   *    [[OrdersDaily.indexed]]: a plain window, safe because the grid
   *    is bounded by the calendar, not the data;
@@ -239,13 +239,13 @@ object StatQueries extends QueryModule {
     * to ~2e9 rows; one double division + sqrt at the end).
     *
     * Shape: collapse each variable to its DISTINCT-VALUE grain, global
-    * cumulative counts via [[ScaledWindow.rankCum]] (two-pass, no
+    * cumulative counts via [[ScaledWindow.rankCum]] (no
     * partition-less window), broadcast/shuffle the tiny rank maps back
     * onto the rows, one map-side-combined moment aggregate. */
   private val spearman: Q = (s, d) => {
     val t = Tables.lineitem(s, d)
       .select(col("l_quantity").as("x"), col("l_extendedprice").as("y"))
-    def rankMap(cn: String, out: String): (DataFrame, Long) = {
+    def rankMap(cn: String, out: String): (DataFrame, Column) = {
       val g = t.groupBy(col(cn)).agg(count(lit(1)).as("c"))
       val r = ScaledWindow.rankCum(g, Seq(col(cn).asc), Seq("cum" -> col("c")))
       (r.df.select(col(cn), (lit(2) * col("cum") - col("c") + 1).as(out)),
@@ -257,13 +257,12 @@ object StatQueries extends QueryModule {
     // ~50 at every SF) — broadcast it explicitly so attaching x-ranks
     // never exchanges the fact table (round 17, guide §3.1); the
     // y map (price grain, DATA-sized) is pinned to the sort-merge
-    // join: round 18's literal-offset rankCum shrank its size
-    // estimate below the auto-broadcast threshold and the planner
-    // started broadcasting the whole pass-2 window output — measured
-    // 1.5× slower at sf0.1 (collect+broadcast of the data-sized map
-    // every rep) and scale-unsafe at 100 TB, where the distinct-price
-    // grain grows with the data (guide §3.1: pick the strategy
-    // deliberately when estimates mislead)
+    // join: a rankCum output's size estimate can fall below the
+    // auto-broadcast threshold, and broadcasting the whole window
+    // output measured 1.5× slower at sf0.1 (collect+broadcast of the
+    // data-sized map every rep) and is scale-unsafe at 100 TB, where
+    // the distinct-price grain grows with the data (guide §3.1: pick
+    // the strategy deliberately when estimates mislead)
     val sums = t.join(broadcast(rx), "x").join(ry.hint("merge"), "y").agg(
       sum(col("dx").cast(dec)).as("sx"),
       sum(col("dy").cast(dec)).as("sy"),
@@ -271,10 +270,10 @@ object StatQueries extends QueryModule {
       sum(col("dy").cast(dec) * col("dy")).as("syy"),
       sum(col("dx").cast(dec) * col("dy")).as("sxy"))
     sums.select(
-      lit(n).as("n_rows"),
-      round((lit(n) * col("sxy") - col("sx") * col("sy")).cast("double")
-        / (sqrt((lit(n) * col("sxx") - col("sx") * col("sx")).cast("double"))
-          * sqrt((lit(n) * col("syy") - col("sy") * col("sy")).cast("double"))),
+      n.as("n_rows"),
+      round((n * col("sxy") - col("sx") * col("sy")).cast("double")
+        / (sqrt((n * col("sxx") - col("sx") * col("sx")).cast("double"))
+          * sqrt((n * col("syy") - col("sy") * col("sy")).cast("double"))),
         6).as("rho"))
   }
 
@@ -335,12 +334,13 @@ object StatQueries extends QueryModule {
         ((col("v2") - col("v")).cast("double")
           / (datediff(col("d2"), col("day")) * lit(100.0))).as("slope"))
     val rnk = ScaledWindow.rankCum(pairs,
-      Seq(col("slope").asc, col("d1").asc, col("d2").asc), None)
+      Seq(col("slope").asc, col("d1").asc, col("d2").asc))
     val m = rnk.n
-    val (k1, k2) = ((m + 1) / 2, m / 2 + 1)
+    val k1 = call_function("div", m + 1, lit(2))
+    val k2 = call_function("div", m, lit(2)) + 1
     rnk.df.filter(col("rk") === k1 || col("rk") === k2)
       .agg(round((min("slope") + max("slope")) / 2, 6).as("slope_usd_day"))
-      .select(lit(m).as("n_pairs"), col("slope_usd_day"))
+      .select(m.as("n_pairs"), col("slope_usd_day"))
   }
 
   /** Quantile regression (τ = 0.9) of daily revenue on the day index
@@ -762,10 +762,10 @@ object StatQueries extends QueryModule {
         when(col("h2") < lit(13107L) + lit(6554L) * col("t"), 1L)
           .otherwise(0L))
     val rnk = ScaledWindow.rankCum(units,
-      Seq(col("score").desc, col("o_orderkey").asc), None)
-    val n = rnk.n
+      Seq(col("score").desc, col("o_orderkey").asc))
     val g = rnk.df
-      .withColumn("decile", expr(s"((rk - 1) * 10) DIV ${n}L") + 1)
+      .withColumn("decile",
+        call_function("div", (col("rk") - 1) * 10, rnk.n) + 1)
       .groupBy("decile")
       .agg(
         sum(when(col("t") === 1, 1L).otherwise(0L)).as("nt"),
@@ -1413,12 +1413,11 @@ object StatQueries extends QueryModule {
     val ties = vals.filter(col("c") > 1)
       .agg(coalesce(sum(col("c").cast(dec) * col("c") * col("c") -
         col("c")), lit(0).cast(dec)).as("t3"))
-    val h = lit(12.0) / (lit(n) * (lit(n) + 1)) * col("st") -
-      lit(3.0) * (lit(n) + 1)
+    val h = lit(12.0) / (n * (n + 1)) * col("st") - lit(3.0) * (n + 1)
     val corr = lit(1.0) - col("t3").cast("double") /
-      (lit(n).cast(dec) * lit(n) * lit(n) - lit(n)).cast("double")
+      (n.cast(dec) * n * n - n).cast("double")
     terms.crossJoin(broadcast(ties))
-      .select(col("k").as("n_groups"), lit(n).as("n_orders"),
+      .select(col("k").as("n_groups"), n.as("n_orders"),
         round(h / corr, 4).as("h_stat"),
         ((h / corr) > lit(36.415)).as("reject_equal"))
   }
@@ -1747,12 +1746,12 @@ object StatQueries extends QueryModule {
           lit(0).cast(dec)).as("t3"))
     // 2U₁ = 2R₁ − n₁(n₁+1) and 2·E[U₁] = n₁n₂ are exact integers;
     // 4σ² = n₁n₂/3·((n+1) − t3/(n(n−1))) so z = (2U₁−n₁n₂)/√(4σ²)
-    val n2 = lit(n) - col("n1")
+    val n2 = n - col("n1")
     val u2 = (col("d2r1") - col("n1").cast(dec) * (col("n1") + 1))
     val z = (u2.cast("double") - (col("n1").cast(dec) * n2).cast("double")) /
       sqrt((col("n1").cast(dec) * n2).cast("double") / lit(3.0) *
-        (lit((n + 1).toDouble) - col("t3").cast("double")
-          / lit((n * (n - 1)).toDouble)))
+        ((n + 1).cast("double") - col("t3").cast("double")
+          / (n * (n - 1)).cast("double")))
     a.select(col("n1"), n2.as("n2"),
       (u2.cast("double") / lit(2.0)).as("u1"),
       round(z, 4).as("z"),
@@ -1943,7 +1942,7 @@ object StatQueries extends QueryModule {
     * no-purchase log-likelihood-ratio increments, stop at the first
     * crossing of the ±ln((1−β)/α) Wald boundaries. Increments are
     * integer micro-nats (exact long cumsum through
-    * [[ScaledWindow.rankCum]] — associative, so the two-pass offset
+    * [[ScaledWindow.rankCum]] — associative, so the per-bucket offset
     * decomposition is bit-identical to the sequential walk); the first
     * crossing is min(rk) with min_by retrieving its LLR — integer
     * compares end to end, nothing to mirror. */
@@ -1963,8 +1962,8 @@ object StatQueries extends QueryModule {
         .otherwise("accept_h0").as("decision"),
       col("nd").as("n_at_decision"),
       col("llr").as("llr_micro_nats"),
-      lit(rnk.n).as("n_total"),
-      lit(rnk.totals("cum")).as("llr_final_micro"))
+      rnk.n.as("n_total"),
+      rnk.totals("cum").as("llr_final_micro"))
   }
 
   /** Cochran's Q test — did the customer base's yearly purchase
@@ -2270,9 +2269,9 @@ object StatQueries extends QueryModule {
     val t = rnk.df
       .agg(sum((col("ca") + col("cb")).cast(dec) * (gap * gap)).as("s"))
       .select((col("s").cast("double") /
-        (lit(na.toDouble * nb) * lit(((na + nb).toDouble * (na + nb)))))
+        (na.cast("double") * nb * ((na + nb).cast("double") * (na + nb))))
         .as("t"))
-    t.select(lit(na).as("n_a"), lit(nb).as("n_b"),
+    t.select(na.as("n_a"), nb.as("n_b"),
       round(col("t"), 6).as("t_stat"),
       (col("t") > lit(0.461)).as("reject_same_dist"))
   }
@@ -2302,11 +2301,11 @@ object StatQueries extends QueryModule {
     // ordered-pair distance total of source counts `c` against target
     // cumulative (cnt, val) columns with grand totals (nT, tT)
     def pairSum(c: Column, cum: Column, cumv: Column, cOwn: Column,
-        nT: Long, tT: Long) =
+        nT: Column, tT: Column) =
       sum(c.cast(dec) * (col("v").cast(dec) * (cum - cOwn)
         - (cumv.cast(dec) - cOwn.cast(dec) * col("v"))
-        + (lit(tT).cast(dec) - cumv)
-        - col("v").cast(dec) * (lit(nT) - cum)))
+        + (tT.cast(dec) - cumv)
+        - col("v").cast(dec) * (nT - cum)))
     val sums = rnk.df.agg(
       pairSum(col("ca"), col("cumb"), col("cumbv"), col("cb"), nb, tbv)
         .as("eab"),
@@ -2315,10 +2314,10 @@ object StatQueries extends QueryModule {
       pairSum(col("cb"), col("cumb"), col("cumbv"), col("cb"), nb, tbv)
         .as("ebb"))
     val d2 = lit(2.0) * sums("eab").cast("double") /
-      lit(na.toDouble * nb) -
-      sums("eaa").cast("double") / lit(na.toDouble * na) -
-      sums("ebb").cast("double") / lit(nb.toDouble * nb)
-    sums.select(lit(na).as("n_a"), lit(nb).as("n_b"),
+      (na.cast("double") * nb) -
+      sums("eaa").cast("double") / (na.cast("double") * na) -
+      sums("ebb").cast("double") / (nb.cast("double") * nb)
+    sums.select(na.as("n_a"), nb.as("n_b"),
       round(d2 / lit(100.0), 6).as("d2_usd"),
       round(sqrt(greatest(d2, lit(0.0))) / lit(10.0), 6).as("e_dist"))
   }
@@ -2398,13 +2397,13 @@ object StatQueries extends QueryModule {
     val gap = col("cuma").cast(dec) * nt - col("cumn").cast(dec) * na
     val term = round((col("ca") + col("cb")).cast("double") *
       (gap * gap).cast("double") /
-      (col("cumn").cast(dec) * (lit(nt) - col("cumn"))).cast("double"))
+      (col("cumn").cast(dec) * (nt - col("cumn"))).cast("double"))
       .cast("long")
-    val a2 = col("s").cast("double") * lit(1.0 / na + 1.0 / nb) /
-      lit(nt.toDouble)
+    val a2 = col("s").cast("double") * (lit(1.0) / na + lit(1.0) / nb) /
+      nt.cast("double")
     rnk.df.filter(col("cumn") < nt)
       .agg(sum(term.cast(dec)).as("s"))
-      .select(lit(na).as("n_a"), lit(nb).as("n_b"),
+      .select(na.as("n_a"), nb.as("n_b"),
         round(a2, 4).as("a2"),
         (a2 > lit(2.492)).as("reject_same_dist"))
   }

@@ -994,16 +994,15 @@ object TextQueries extends QueryModule {
     * Scale shape: the corpus-sized stage is the word count (partial
     * aggregation absorbs heavy hitters map-side); id assignment runs on
     * the POST-FLOOR vocabulary through [[ScaledWindow.rankCum]]'s
-    * two-pass partition-offset rank (round 11) — even a 100M-token
-    * vocabulary never funnels through one task. */
+    * bucketed rank — even a 100M-token vocabulary never funnels
+    * through one task. */
   private val vocabBuild: Q = (s, d) => {
     val minCount = 5
     val counted = docsWithWords(s, d)
       .select(explode(col("w")).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n"))
       .filter(col("n") >= minCount)
-    ScaledWindow.rankCum(counted,
-      Seq(col("n").desc, col("word").asc), None)
+    ScaledWindow.rankCum(counted, Seq(col("n").desc, col("word").asc))
       .df
       .withColumn("token_id", col("rk") - 1)
       .drop("rk")

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -83,20 +84,23 @@ object WindowQueries extends QueryModule {
       .orderBy("c_mktsegment", "c_custkey")
   }
 
+  /** Sort key of [[winRankSalted]]'s one global rank. */
+  private[graft] val saltedOrder: Seq[Column] =
+    Seq(col("c_mktsegment").asc, col("c_acctbal").desc, col("c_custkey").asc)
+
   /** W1 at scale (SURVEY §9 windows caveat, VERDICT round-1 item 5):
     * q_win_rank partitions by ~5 market segments, so at 1000× one task
     * sorts a fifth of the table. This variant produces the SAME output
     * through a skew-proof plan:
     *
-    *   1. `repartitionByRange(segment asc, acctbal desc, custkey asc)`
-    *      splits every segment across many range partitions that are
-    *      globally ordered — no task ever holds a whole segment.
-    *   2. row_number within each (segment, partition) slice — the sort
-    *      is local to a slice, bounded by partition size.
-    *   3. Merge: per-slice counts (one tiny row per slice) get a
-    *      cumulative-sum window — driver-scale data, segments × slices
-    *      rows — and are broadcast back: rn = local_rn + offset.
-    *   4. ntile(4) is recomputed arithmetically from rn and the
+    *   1. one [[ScaledWindow.rankCum]] over (segment asc, acctbal
+    *      desc, custkey asc): its buckets split every segment across
+    *      many globally ordered key ranges — no task ever sorts a
+    *      whole segment.
+    *   2. per segment, the row count and the rows of all earlier
+    *      segments (one tiny row per segment, broadcast back):
+    *      rn = rk − before.
+    *   3. ntile(4) is recomputed arithmetically from rn and the
     *      per-segment total (SQL ntile: the first n%k tiles take
     *      ceil(n/k) rows) — integer math, no second sort.
     *
@@ -104,40 +108,21 @@ object WindowQueries extends QueryModule {
     * UNIQUE (custkey is a key), so rank = dense_rank = row_number by
     * definition — same values the unsalted window and the oracle
     * produce. A non-unique ordering would additionally min/densify over
-    * peer groups in step 3.
-    *
-    * Exactness does not depend on where the range boundaries land: any
-    * split yields the same rn after the offset merge. It DOES require
-    * that the offsets branch and the join's probe branch observe the
-    * SAME boundaries — range sampling is seeded per RDD instantiation,
-    * so two independent executions of the exchange could split
-    * differently. `local` is therefore cache()d: both branches read one
-    * materialized pid assignment, with no reliance on the exchange-reuse
-    * optimization being enabled (regression-tested with reuse off). */
+    * peer groups in step 2. */
   private val winRankSalted: Q = (s, d) => {
-    val slices = 32
-    val ranged = Tables.customer(s, d)
+    val cust = Tables.customer(s, d)
       .select("c_mktsegment", "c_custkey", "c_acctbal")
-      .repartitionByRange(slices,
-        col("c_mktsegment").asc, col("c_acctbal").desc, col("c_custkey").asc)
-      .withColumn("pid", spark_partition_id())
-    val wLocal = Window.partitionBy("c_mktsegment", "pid")
-      .orderBy(desc("c_acctbal"), asc("c_custkey"))
-    val local = ranged.withColumn("local_rn", row_number().over(wLocal)).cache()
-    // per-slice counts: segments × slices rows — tiny by construction
-    val wSeg = Window.partitionBy("c_mktsegment").orderBy("pid")
-    val offsets = local.groupBy("c_mktsegment", "pid")
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("offset",
-        coalesce(sum("cnt").over(wSeg.rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .withColumn("n_seg", sum("cnt").over(
-        Window.partitionBy("c_mktsegment")
-          .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select("c_mktsegment", "pid", "offset", "n_seg")
+    // one row per segment: its count and the rows of all earlier ones
+    val segs = cust.groupBy("c_mktsegment").agg(count(lit(1)).as("n_seg"))
+      .agg(sort_array(array_agg(struct("c_mktsegment", "n_seg"))).as("a"))
+      .select(inline(transform(col("a"), (x, i) => struct(
+        x("c_mktsegment").as("c_mktsegment"), x("n_seg").as("n_seg"),
+        aggregate(slice(col("a"), lit(1), i), lit(0L), (acc, y) => acc + y("n_seg"))
+          .as("before")))))
     val k = 4
-    val merged = local.join(broadcast(offsets), Seq("c_mktsegment", "pid"))
-      .withColumn("rn", (col("local_rn") + col("offset")).cast("int"))
+    val merged = ScaledWindow.rankCum(cust, saltedOrder).df
+      .join(broadcast(segs), "c_mktsegment")
+      .withColumn("rn", (col("rk") - col("before")).cast("int"))
       // SQL ntile(k): big = n%k tiles of size ceil(n/k), then size n/k
       .withColumn("q_small", (col("n_seg") / k).cast("long"))
       .withColumn("q_big", col("n_seg") % k)

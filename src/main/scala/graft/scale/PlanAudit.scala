@@ -77,8 +77,8 @@ object PlanAudit {
           if (isGlobal)
             out += Finding("globalwindow",
               "partition-less WindowExec: every row moves to ONE task — " +
-                "rewrite on the two-pass partition-offset form " +
-                "(ScaledWindow.rankCum) unless the input is provably " +
+                "rank through ScaledWindow.rankCum (per-bucket windows " +
+                "plus in-plan offsets) unless the input is provably " +
                 s"grid-sized: $t")
         }
       }

@@ -9,12 +9,13 @@ import graft.queries.CacheRegistry
   * dropping every registered query-internal persist, then collecting
   * must give the same rows as building and collecting directly.
   *
-  * The queries below number the calendar-day grid. Each used to index
-  * it through `ScaledWindow.rankCum`, whose per-partition offsets are
-  * collected at build time; once its stamped cache was dropped, the
-  * re-sampled range partitioning moved rows between partitions and
-  * the offsets landed on the wrong days. They now read
-  * `OrdersDaily.indexed`, a plain window over the bounded grid. */
+  * The first queries below number the calendar-day grid through
+  * `OrdersDaily.indexed`, a plain window over the bounded grid. The
+  * rest rank data-sized input through `ScaledWindow.rankCum`. Both
+  * used to collect per-partition offsets at build time from a cached
+  * range repartition; once that cache was dropped, the re-sampled
+  * range bounds moved rows between partitions and the offsets landed
+  * on the wrong rows. */
 class CacheResidencySpec extends SparkSpec {
 
   private val dayGridQueries = Seq(
@@ -23,17 +24,25 @@ class CacheResidencySpec extends SparkSpec {
     "q_cooks_distance", "q_breusch_pagan", "q_reset", "q_chow",
     "q_runs_test")
 
-  // rankCum's range sampler seeds from the RDD id, which a recompute
-  // changes; at sf0.001 every grid partition is smaller than its
-  // sample and is taken whole, so the bounds could not move there.
-  // sf0.01 is the smallest test size at which they did.
+  private val rankQueries = Seq(
+    "q_abc_class", "q_anderson_darling", "q_auc", "q_conformal", "q_cvm",
+    "q_energy_distance", "q_gini", "q_kruskal", "q_levene",
+    "q_lift_deciles", "q_lorenz", "q_mann_whitney", "q_pareto_revenue",
+    "q_qini", "q_spearman", "q_theil_sen", "q_weighted_median",
+    "q_wilcoxon", "q_ks_test", "q_sprt", "q_bootstrap_ci", "q_zipf_slope",
+    "q_heaps_law", "q_vocab_build", "q_win_rank_salted")
+
+  // Spark's range sampler seeds from the RDD id, which a recompute
+  // changes; at sf0.001 every partition is smaller than its sample and
+  // is taken whole, so the bounds could not move there. sf0.01 is the
+  // smallest test size at which they did.
   private val dir = new java.io.File(sf).toPath.resolveSibling("sf0.01").toString
 
   // string form: a NaN cell compares equal to itself
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq
 
-  dayGridQueries.foreach { name =>
+  (dayGridQueries ++ rankQueries).foreach { name =>
     test(s"$name gives the same rows when its caches are dropped before the run") {
       val q = SparkEntry.queries(name)
       val direct = rows(q(spark, dir))

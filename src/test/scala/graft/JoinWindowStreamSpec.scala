@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.{JoinQueries, StreamQueries, WindowQueries}
+import graft.queries.{JoinQueries, ScaledWindow, StreamQueries, WindowQueries}
 
 class JoinWindowStreamSpec extends SparkSpec {
 
@@ -122,35 +122,34 @@ class JoinWindowStreamSpec extends SparkSpec {
   }
 
   test("salted rank stays exact with exchange reuse disabled") {
-    // the offsets branch and the probe branch must see ONE pid
-    // assignment even when the optimizer cannot dedup the range
-    // exchange — guards the cache() that pins a single instantiation
-    spark.conf.set("spark.sql.exchangeReuse.enabled", "false")
-    try {
+    // the salted plan's rank must not rely on the optimizer deduping
+    // its exchanges or its scalar subqueries
+    withConf(
+      "spark.sql.exchange.reuse" -> "false",
+      "spark.sql.execution.reuseSubquery" -> "false") {
       val plain = WindowQueries.queries("q_win_rank")(spark, sf)
         .collect().map(_.toSeq)
       val salted = WindowQueries.queries("q_win_rank_salted")(spark, sf)
         .collect().map(_.toSeq)
       assert(salted.length == plain.length)
       salted.zip(plain).foreach { case (s, p) => assert(s == p) }
-    } finally spark.conf.set("spark.sql.exchangeReuse.enabled", "true")
+    }
   }
 
   test("salted rank never sorts a whole segment in one task") {
-    import SparkSpec.spark.implicits._
-    // the skew-proof property: every segment is split across >1 range
-    // slice, so no single task's sort covers a full segment
-    val slices = Tables.customer(spark, sf)
-      .select("c_mktsegment", "c_custkey", "c_acctbal")
-      .repartitionByRange(32,
-        col("c_mktsegment").asc, col("c_acctbal").desc, col("c_custkey").asc)
-      .withColumn("pid", spark_partition_id())
-      .groupBy("c_mktsegment")
-      .agg(countDistinct(col("pid")).as("n_slices"))
-      .collect()
+    // the skew-proof property: every segment spans more than one of the
+    // rankCum buckets the salted query windows over, so no single
+    // task's sort covers a full segment
+    val slices = withConf("spark.sql.shuffle.partitions" -> "32") {
+      ScaledWindow.bucketed(Tables.customer(spark, sf), WindowQueries.saltedOrder)
+        .groupBy("c_mktsegment")
+        .agg(countDistinct(col("_b")).as("n_slices"))
+        .collect()
+    }
+    assert(slices.length == 5)
     slices.foreach { r =>
       assert(r.getLong(1) > 1,
-        s"segment ${r.getString(0)} landed in a single range slice")
+        s"segment ${r.getString(0)} landed in a single bucket")
     }
   }
 }

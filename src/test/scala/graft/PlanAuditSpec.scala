@@ -12,17 +12,6 @@ import graft.scale.PlanAudit
   */
 class PlanAuditSpec extends SparkSpec {
 
-  private def withConf(pairs: (String, String)*)(body: => Unit): Unit = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-      body
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   private def kinds(fs: Seq[PlanAudit.Finding]): Set[String] =
     fs.map(_.kind).toSet
 

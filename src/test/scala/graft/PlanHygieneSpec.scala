@@ -42,9 +42,8 @@ class PlanHygieneSpec extends SparkSpec {
     // equi-depth scoring joins) and the 7-day rolling-DAU range join
     // against the broadcast day spine (dimension-sized by construction)
     "q_rfm", "q_histogram_eqdepth", "q_rolling_distinct",
-    // round 9 late: 1-row broadcasts — the KS statistic's sample sizes
-    // and the overlap sketch's estimate row
-    "q_ks_test", "q_overlap_sketch",
+    // round 9 late: 1-row broadcast — the overlap sketch's estimate row
+    "q_overlap_sketch",
     // round 10: the order-count total rides into the rule metrics as
     // the same documented 1-row broadcast cross join; the bootstrap CI
     // broadcasts its 1-row order-statistics frame the same way

@@ -1,19 +1,27 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.queries.ScaledWindow
 import graft.scale.PlanAudit
 
-/** The two-pass partition-offset rank/cumsum must be value-identical to
-  * the single-partition window it replaces, and its plan must be free
-  * of the partition-less WindowExec shape PlanAudit now flags.
+/** The bucketed rank/cumsum must be value-identical to the
+  * single-partition window it replaces at any shuffle-partition count,
+  * build without starting a Spark job, and plan none of the
+  * partition-less WindowExec shape PlanAudit flags.
   */
 class ScaledWindowSpec extends SparkSpec {
 
   private def perCustomerCents = Tables.orders(spark, sf)
     .groupBy("o_custkey")
     .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("v"))
+
+  private def withParts[T](p: Int)(body: => T): T =
+    withConf("spark.sql.shuffle.partitions" -> p.toString)(body)
+
+  /** The value of a scalar column such as `Ranked.n`. */
+  private def scalar(c: Column): Long = spark.range(1).select(c).head().getLong(0)
 
   test("rankCum equals the global-window form, at several partition counts") {
     val df = perCustomerCents
@@ -25,31 +33,33 @@ class ScaledWindowSpec extends SparkSpec {
       .select("o_custkey", "rk", "cum")
       .collect().map(_.toSeq).sortBy(_(1).asInstanceOf[Long])
     Seq(1, 3, 32).foreach { p =>
-      val got = ScaledWindow
-        .rankCum(df, Seq(col("v").desc, col("o_custkey").asc),
-          Some(col("v")), numParts = p)
-        .df.select("o_custkey", "rk", "cum")
-        .collect().map(_.toSeq).sortBy(_(1).asInstanceOf[Long])
-      assert(got.toSeq == expect.toSeq, s"mismatch at numParts=$p")
+      val got = withParts(p) {
+        ScaledWindow
+          .rankCum(df, Seq(col("v").desc, col("o_custkey").asc),
+            Seq("cum" -> col("v")))
+          .df.select("o_custkey", "rk", "cum")
+          .collect().map(_.toSeq).sortBy(_(1).asInstanceOf[Long])
+      }
+      assert(got.toSeq == expect.toSeq, s"mismatch at $p shuffle partitions")
     }
   }
 
   test("driver-known totals match the aggregate truth") {
     val df = perCustomerCents
-    val rnk = ScaledWindow.rankCum(df,
-      Seq(col("v").asc, col("o_custkey").asc), Some(col("v")), numParts = 5)
+    val rnk = withParts(5)(ScaledWindow.rankCum(df,
+      Seq(col("v").asc, col("o_custkey").asc), Seq("cum" -> col("v"))))
     val truth = df.agg(count(lit(1)), sum("v")).head()
-    assert(rnk.n == truth.getLong(0))
-    assert(rnk.total == truth.getLong(1))
+    assert(scalar(rnk.n) == truth.getLong(0))
+    assert(scalar(rnk.total) == truth.getLong(1))
   }
 
   test("rank-only mode needs no value column") {
     val df = perCustomerCents
-    val rnk = ScaledWindow.rankCum(df,
-      Seq(col("v").asc, col("o_custkey").asc), None, numParts = 4)
+    val rnk = withParts(4)(ScaledWindow.rankCum(df,
+      Seq(col("v").asc, col("o_custkey").asc)))
     assert(!rnk.df.columns.contains("cum"))
     val rks = rnk.df.select("rk").collect().map(_.getLong(0)).sorted
-    assert(rks.toSeq == (1L to rnk.n).toSeq)
+    assert(rks.toSeq == (1L to scalar(rnk.n)).toSeq)
   }
 
   test("PlanAudit flags the partition-less window, passes the two-pass form") {
@@ -60,15 +70,24 @@ class ScaledWindowSpec extends SparkSpec {
     // the reviewed-exception path clears it (month grids, duration axes)
     assert(!PlanAudit.findings(global, allow = Set("globalwindow"))
       .exists(_.kind == "globalwindow"))
-    val twoPass = ScaledWindow.rankCum(df,
-      Seq(col("v").asc, col("o_custkey").asc), Some(col("v"))).df
-    assert(!PlanAudit.findings(twoPass).exists(_.kind == "globalwindow"))
+    val bucketed = ScaledWindow.rankCum(df,
+      Seq(col("v").asc, col("o_custkey").asc), Seq("cum" -> col("v"))).df
+    assert(!PlanAudit.findings(bucketed).exists(_.kind == "globalwindow"))
+  }
+
+  test("building a rankCum plan starts no Spark job") {
+    val df = perCustomerCents
+    df.schema // the table footer read is not rankCum's
+    assert(jobsDuring(ScaledWindow.rankCum(df,
+      Seq(col("v").desc, col("o_custkey").asc),
+      Seq("cum" -> col("v"), "c2" -> col("o_custkey")))) == 0)
   }
 
   test("property: rankCum equals the window form on random tied data") {
-    // randomized cross-check: heavy ties in the primary sort key (the
-    // tie-break column must resolve them), negative values, several
-    // metrics at once, assorted partition counts
+    // randomized cross-check: heavy ties in the primary and descending
+    // sort keys (the tie-break column must resolve them), negative
+    // values, several metrics at once, assorted partition counts — and
+    // neither exchange nor subquery reuse to lean on
     val rnd = new scala.util.Random(20260814L)
     (1 to 5).foreach { trial =>
       val n = 200 + rnd.nextInt(800)
@@ -80,26 +99,33 @@ class ScaledWindowSpec extends SparkSpec {
       import s.implicits._
       val df = rows.toDF("id", "v", "m1", "m2")
       val parts = 1 + rnd.nextInt(40)
-      val got = graft.queries.ScaledWindow.rankCum(df,
-        Seq(col("v").asc, col("id").asc),
-        Seq("c1" -> col("m1"), "c2" -> col("m2")), numParts = parts)
+      val (got, gotRows, gotN, gotC1, gotC2) = withConf(
+        "spark.sql.shuffle.partitions" -> parts.toString,
+        "spark.sql.exchange.reuse" -> "false",
+        "spark.sql.execution.reuseSubquery" -> "false") {
+        val got = ScaledWindow.rankCum(df,
+          Seq(col("v").asc, col("m2").desc, col("id").asc),
+          Seq("c1" -> col("m1"), "c2" -> col("m2")))
+        (got, got.df.select("id", "rk", "c1", "c2").collect(),
+          scalar(got.n), scalar(got.totals("c1")), scalar(got.totals("c2")))
+      }
       // sequential truth
-      val sorted = rows.sortBy(r => (r._2, r._1))
+      val sorted = rows.sortBy(r => (r._2, -r._4, r._1))
       var (a, b) = (0L, 0L)
       val want = sorted.zipWithIndex.map { case ((id, _, m1, m2), i) =>
         a += m1; b += m2
         id -> ((i + 1).toLong, a, b)
       }.toMap
-      val gotRows = got.df.select("id", "rk", "c1", "c2").collect()
       assert(gotRows.length == n)
       gotRows.foreach { r =>
         val (id, rk, c1, c2) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
         assert(want(id) == ((rk, c1, c2)),
           s"trial $trial parts $parts id $id: got ($rk,$c1,$c2) want ${want(id)}")
       }
-      assert(got.n == n.toLong)
-      assert(got.totals("c1") == rows.map(_._3).sum)
-      assert(got.totals("c2") == rows.map(_._4).sum)
+      assert(got.df.columns.toSeq == Seq("id", "v", "m1", "m2", "rk", "c1", "c2"))
+      assert(gotN == n.toLong)
+      assert(gotC1 == rows.map(_._3).sum)
+      assert(gotC2 == rows.map(_._4).sum)
     }
   }
 
@@ -107,11 +133,11 @@ class ScaledWindowSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val empty = Seq.empty[(Long, Long)].toDF("id", "v")
-    val rnk = graft.queries.ScaledWindow.rankCum(empty,
-      Seq(col("v").asc, col("id").asc), Seq("c" -> col("v")), numParts = 8)
+    val rnk = withParts(8)(ScaledWindow.rankCum(empty,
+      Seq(col("v").asc, col("id").asc), Seq("c" -> col("v"))))
     assert(rnk.df.count() == 0)
-    assert(rnk.n == 0L)
-    assert(rnk.totals("c") == 0L)
+    assert(scalar(rnk.n) == 0L)
+    assert(scalar(rnk.totals("c")) == 0L)
   }
 
   test("the de-globalized queries plan no partition-less WindowExec") {

@@ -25,17 +25,6 @@ import graft.scale.PlanAudit
   */
 class SkewSpec extends SparkSpec {
 
-  private def withConf(pairs: (String, String)*)(body: => Unit): Unit = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    try {
-      pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-      body
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   /** Skewed customer-shaped fixture: 95% of rows in one market segment.
     * Written as parquet so the queries run their real scan path. */
   private lazy val skewDir: String = {

@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.{Files, StandardCopyOption}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.lit
 
 /** `Tables.table` reads each table's schema from its footers once per
@@ -14,29 +11,6 @@ class TablesSpec extends SparkSpec {
 
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
-
-  /** Spark jobs started while `body` runs. A marked job run after `body`
-    * is waited for, so every earlier job start has reached the listener. */
-  private def jobsDuring(body: => Unit): Int = {
-    val mark = s"tables-spec-mark-${System.nanoTime()}"
-    val jobs = new AtomicInteger()
-    val seenMark = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == mark))
-          seenMark.countDown()
-        else if (seenMark.getCount > 0) jobs.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription(mark)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(seenMark.await(30, TimeUnit.SECONDS), "mark job never reported")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** Each of the ten tables re-landed as a part-file directory. */
   private lazy val dirForm: String = {
