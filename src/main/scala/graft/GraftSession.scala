@@ -12,7 +12,8 @@ object GraftSession {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
   /** `local[cpus]` with one shuffle partition per core, AQE with
-    * partition coalescing, UTC and no UI. */
+    * partition coalescing, UTC, parquet nanosecond timestamps read as
+    * longs, and no UI. */
   def builder(cpus: String = GraftSession.cpus): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
@@ -32,5 +33,9 @@ object GraftSession {
       // layout usable without a re-shuffle.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      // Tables.events reads a TIMESTAMP(NANOS) events.ts as a long and
+      // sets this itself; set from the start, the first events read no
+      // longer changes a setting the Tables schema memo keys on
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
 }

@@ -36,7 +36,8 @@ object Tables {
     * dozens of times. So the inferred schema is memoized and the scan is
     * `spark.read.schema(memo).parquet(path)`. The memo key is the path,
     * its [[version]], and the values of the settings that change what
-    * inference returns (`nanosAsLong`, which [[events]] sets, then
+    * inference returns (`nanosAsLong`, which [[GraftSession]] sets on
+    * its sessions and [[events]] sets on any other, then
     * `binaryAsString`, `int96AsTimestamp`, `inferTimestampNTZ.enabled`
     * and `mergeSchema`). The session is not in the key: the schema
     * depends only on the files and those settings.

@@ -275,43 +275,40 @@ object RelationalQueries extends QueryModule {
       .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))
 
   /** E6 exact quantiles (reference NB cell 22 probplot): same
-    * quantile_cont semantics as SQL `percentile`, computed by TWO-PASS
-    * HISTOGRAM NARROWING ([[histogramQuantiles]]) instead of the
+    * quantile_cont semantics as SQL `percentile`, computed by
+    * HISTOGRAM NARROWING ([[exactQuantiles]]) instead of the
     * percentile aggregate. `percentile` keeps a value→count map of the
     * WHOLE column in every partial buffer and sorts the merged map on
     * one thread — the habitual plan that dies first at scale and was
-    * the perennial bench top-15 here. The narrowing plan is three
-    * codegen'd scans (moments, 2048 bucket counts, candidate-bucket
-    * rank pick) with O(buckets) driver traffic; the extracted order
-    * statistics are exactly the full sort's, so the interpolation —
-    * and the DuckDB quantile_cont oracle hash — are unchanged. The
-    * at-scale *approximate* variant is still approx_percentile
+    * the perennial bench top-15 here. The extracted order statistics
+    * are exactly the full sort's, so the interpolation — and the
+    * DuckDB quantile_cont oracle hash — are unchanged. The at-scale
+    * *approximate* variant is still approx_percentile
     * (q_quantiles_approx, t-digest sketch). */
   private val quantiles: Q = (s, d) =>
-    emitQuantiles(s,
-      histogramQuantiles(Tables.lineitem(s, d), "l_extendedprice",
-        Seq(0.25, 0.50, 0.75, 0.95)),
-      Seq("p25", "p50", "p75", "p95"),
-      Tables.lineitem(s, d))
+    exactQuantiles(Tables.lineitem(s, d), "l_extendedprice",
+      Seq(0.25, 0.50, 0.75, 0.95))
+      .select(rounded(Seq("p25", "p50", "p75", "p95")): _*)
 
   /** E6 grouped form: exact per-group quantiles — the profiling query a
-    * feature store runs per segment, by GROUPED two-pass histogram
-    * narrowing ([[histogramQuantilesGrouped]]): the q_quantiles
-    * rewrite with the group key carried through both passes. The
-    * per-group `percentile` aggregate this replaces buffers every
-    * group value in one aggregation buffer (the row that dies first
-    * when a segment holds billions of values); the narrowing plan's
-    * heaviest state is a spillable per-(group, candidate-bucket)
-    * window over ~n/2048 rows, and driver traffic is
-    * O(groups × buckets) — segments are bounded (3 here; a profiling
-    * grain is dimension-sized by definition). Order statistics and
-    * the interpolation are exactly the sort's, so the DuckDB
+    * feature store runs per segment, by the same narrowing with the
+    * group key carried through ([[exactQuantiles]]). The per-group
+    * `percentile` aggregate this replaces buffers every group value in
+    * one aggregation buffer (the row that dies first when a segment
+    * holds billions of values); the narrowing plan's heaviest state is
+    * a spillable per-(group, cell, sub-cell) window. Order statistics
+    * and the interpolation are exactly the sort's, so the DuckDB
     * quantile_cont oracle hash is unchanged. */
   private val quantilesByGroup: Q = (s, d) =>
-    histogramQuantilesGrouped(
-      Tables.lineitem(s, d), "l_returnflag", "l_extendedprice",
-      Seq(0.25, 0.50, 0.75), Seq("p25", "p50", "p75"))
+    exactQuantiles(Tables.lineitem(s, d), "l_extendedprice",
+      Seq(0.25, 0.50, 0.75), "l_returnflag")
+      .select(col("l_returnflag") +: rounded(Seq("p25", "p50", "p75")): _*)
       .orderBy("l_returnflag")
+
+  /** The quantiles `q` of [[exactQuantiles]] as columns `names`,
+    * rounded to 4 places. */
+  private def rounded(names: Seq[String]): Seq[Column] =
+    names.zipWithIndex.map { case (nm, i) => round(col("q")(i), 4).as(nm) }
 
   /** E6 grouped exact quantiles, SELECTION form — the scale twin of
     * [[quantilesByGroup]]: `percentile` buffers every group value in one
@@ -437,387 +434,141 @@ object RelationalQueries extends QueryModule {
     } finally { sorted.unpersist(); () }
   }
 
-  /** Exact interpolated quantiles by TWO-PASS HISTOGRAM NARROWING —
-    * the DataFrame-land sibling of [[selectQuantiles]] (which
-    * range-sorts the whole column through an RDD). Pass 1: global
-    * (count, min, max), then `nBuckets` equal-width bucket counts —
-    * both pure codegen aggregates; the driver receives O(nBuckets)
-    * longs, never data. The bucket index floor((x−min)/w) is MONOTONE
-    * in x, so each bucket holds a contiguous global rank range and the
-    * cumulative counts locate every wanted order statistic as
-    * (bucket, local rank). Pass 2 scans ONLY the ≤2·|ps| candidate
-    * buckets (a pushed-down isin filter), ranks within each bucket
-    * (window PARTITIONED by bucket — per-partition state is one
-    * bucket, ~n/nBuckets rows, and a degenerate all-one-value column
-    * short-circuits before the window), and joins the broadcast wanted
-    * ranks. Interpolation is the exact quantile_cont formula on the
-    * same order statistics a full sort would yield — results and
-    * oracle hashes identical to SQL `percentile`. A skewed column
-    * that concentrates one bucket triggers the ONE-LEVEL RECURSION
-    * below: the overfull bucket is re-histogrammed inside its actual
-    * [min, max] (an all-one-value bucket short-circuits with no
-    * pass-2 rows at all), keeping pass-2 window partitions
-    * O(n/nBuckets); sub-skew inside a sub-bucket is the remaining
-    * (documented) single-level trade. */
-  private[graft] def histogramQuantiles(df: DataFrame, column: String,
-      ps: Seq[Double], nBuckets: Int = 2048): Option[Seq[Double]] = {
-    import org.apache.spark.sql.expressions.Window
-    val x = col(column).cast("double")
-    // round 18 (guide §1.2 step 1): the narrowing's 3-5 passes (moments,
-    // bucket counts, candidate ranking, skew bounds/sub-counts) each
-    // re-ran the upstream; one single-column MEMORY_AND_DISK persist
-    // turns that into one computation + cached reads. Every consumer
-    // collects inside this call, so the cache releases eagerly.
-    val rows = df.select(x.as("xv")).filter(col("xv").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val head = rows.agg(count(lit(1)).as("n"),
-      min("xv").as("mn"), max("xv").as("mx")).collect()(0)
-    val n = head.getLong(0)
-    if (n == 0L) return None
-    val mn = head.getDouble(1)
-    val mx = head.getDouble(2)
-    val positions = ps.map(p => p * (n - 1))
-    if (mn == mx) return Some(positions.map(_ => mn))
-    val w = (mx - mn) / nBuckets
-    val bCol = least(greatest(
-      floor((col("xv") - lit(mn)) / lit(w)).cast("int"), lit(0)),
-      lit(nBuckets - 1))
-    val counts = rows.groupBy(bCol.as("b")).agg(count(lit(1)).as("c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val cumBelow = new Array[Long](nBuckets)
-    var acc = 0L
-    var i = 0
-    while (i < nBuckets) {
-      cumBelow(i) = acc; acc += counts.getOrElse(i, 0L); i += 1
-    }
-    // 0-based global rank r lives in the last bucket with cumBelow <= r
-    // AND rows present; local 1-based rank = r - cumBelow + 1
-    val wantedRanks = positions.flatMap(pos =>
-      Seq(math.floor(pos).toLong, math.ceil(pos).toLong)).distinct.sorted
-    val wants: Seq[(Int, Long, Long)] = wantedRanks.map { r =>
-      var bi = nBuckets - 1
-      while (bi > 0 && (cumBelow(bi) > r || !counts.contains(bi))) bi -= 1
-      (bi, r - cumBelow(bi) + 1, r)
-    }
-    val s = df.sparkSession
-    import s.implicits._
-    // --- One-level skew recursion (round 15): a candidate bucket far
-    // above the uniform share is re-histogrammed INSIDE its actual
-    // [min, max] (one extra bounded pass) before ranking, so pass 2's
-    // window partitions stay O(n/nBuckets) on skewed columns too. The
-    // 99%-duplicates corpus is even cheaper: its hot bucket's actual
-    // min == max, so every rank in it resolves DIRECTLY from the
-    // bounds pass with zero pass-2 rows. Residual sub-skew inside a
-    // sub-bucket is the documented one-level trade.
-    val cutoff = skewCutoff(n, nBuckets)
-    val byBucket = wants.groupBy(_._1)
-    val overfull = byBucket.keys.toSeq
-      .filter(b => counts.getOrElse(b, 0L) > cutoff).sorted
-    val direct = scala.collection.mutable.Map.empty[Long, Double]
-    val subWants =
-      scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Long, Long)]
-    var splittable = Seq.empty[(Int, Double, Double)]
-    if (overfull.nonEmpty) {
-      val bounds = rows.select(bCol.as("b"), col("xv"))
-        .filter(col("b").isin(overfull: _*))
-        .groupBy("b").agg(min("xv").as("bmn"), max("xv").as("bmx"))
-        .collect()
-        .map(r => r.getInt(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
-      overfull.foreach { b =>
-        val (bmn, bmx) = bounds(b)
-        if (bmn == bmx)
-          byBucket(b).foreach { case (_, _, gr) => direct(gr) = bmn }
-      }
-      splittable = overfull.flatMap { b =>
-        val (bmn, bmx) = bounds(b)
-        if (bmn < bmx) Some((b, bmn, (bmx - bmn) / nBuckets)) else None
-      }
-      if (splittable.nonEmpty) {
-        val subCounts = rows.select(bCol.as("b"), col("xv"))
-          .filter(col("b").isin(splittable.map(_._1): _*))
-          .groupBy(col("b"), subBucketCol(splittable, nBuckets).as("sb"))
-          .agg(count(lit(1)).as("c"))
-          .collect()
-          .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-        splittable.foreach { case (b, _, _) =>
-          val cumSub = new Array[Long](nBuckets)
-          var acc2 = 0L; var j = 0
-          while (j < nBuckets) {
-            cumSub(j) = acc2; acc2 += subCounts.getOrElse((b, j), 0L); j += 1
-          }
-          byBucket(b).foreach { case (_, lr, gr) =>
-            val r0 = lr - 1 // 0-based rank within the bucket
-            var sj = nBuckets - 1
-            while (sj > 0 && (cumSub(sj) > r0 || !subCounts.contains((b, sj))))
-              sj -= 1
-            subWants += ((b, sj, r0 - cumSub(sj) + 1, gr))
-          }
-        }
-      }
-    }
-    val normalBuckets = byBucket.keys.toSeq
-      .filterNot(overfull.contains).sorted
-    val foundNormal: Map[Long, Double] =
-      if (normalBuckets.isEmpty) Map.empty
+  /** Equal-width cells each narrowing level splits a range into. */
+  private val cells = 2048
+
+  /** Exact interpolated quantiles by two-level HISTOGRAM NARROWING, as
+    * one lazy plan (building it starts no Spark job) — the DataFrame
+    * sibling of [[selectQuantiles]], which range-sorts the whole column
+    * through an RDD. One row per group of `groupBy`, exactly one when
+    * there is none: the group columns and `q`, the quantiles of `value`
+    * at `ps` in order. Nulls in `value`, and rows whose group key is
+    * null, are skipped; the quantiles of an empty input are null.
+    *
+    * A quantile is SQL `percentile`'s and DuckDB `quantile_cont`'s: with
+    * pos = p·(n−1), the 0-based order statistics lo at ⌊pos⌋ and hi at
+    * ⌈pos⌉, and lo + (hi − lo)·(pos − ⌊pos⌋) — the same IEEE operations
+    * in the same order, so the values are bit-identical. `percentile`
+    * keeps a value→count map of the whole column in every partial buffer
+    * and sorts it on one thread; here no window partition holds more
+    * than a sub-cell:
+    *
+    *  1. per group, the bounds [min, max];
+    *  2. each row's cell among [[cells]] equal-width cells of its
+    *     group's [min, max] — monotone in the value, so a cell holds a
+    *     contiguous rank range — and per (group, cell) the count, min
+    *     and max; a scan of the counts in cell order ([[locate]]) finds
+    *     the cell of each wanted rank and the rank inside it. A cell
+    *     whose min equals its max answers its ranks from its bounds;
+    *  3. the rows of the other wanted cells split once more inside
+    *     their cell's own [min, max], so a cell that holds most of the
+    *     rows still shrinks to its sub-cells, and per (group, cell,
+    *     sub-cell) counts place each wanted rank in a sub-cell;
+    *  4. a row_number window PARTITIONED BY (group, cell, sub-cell)
+    *     over the rows of the wanted sub-cells picks each order
+    *     statistic.
+    *
+    * Counts and rank lookups run on the ≤ groups × 2048-row grids
+    * inside the plan, never on the driver. */
+  private[graft] def exactQuantiles(df: DataFrame, value: String,
+      ps: Seq[Double], groupBy: String*): DataFrame = {
+    val cell = groupBy :+ "_b1"
+    val sub = cell :+ "_b2"
+    val keys = groupBy.map(col)
+    val rows = df.select(keys :+ col(value).cast("double").as("_x"): _*)
+      .filter(col("_x").isNotNull)
+    val bounds = rows.groupBy(keys: _*).agg(min("_x").as("_lo"), max("_x").as("_hi"))
+    // each row beside its group's bounds; with no group they are one
+    // scalar subquery, because a keyless join plans a nested-loop join
+    val cut1 = withCell(
+      if (groupBy.nonEmpty) rows.join(broadcast(bounds), groupBy)
       else {
-        val normalWants = wants.filter(wn => normalBuckets.contains(wn._1))
-        rows.select(col("xv"), bCol.as("b"))
-          .filter(col("b").isin(normalBuckets: _*))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("b").orderBy("xv")))
-          .join(broadcast(normalWants.toDF("wb", "lr", "gr")),
-            col("b") === col("wb") && col("rn") === col("lr"))
-          .select(col("gr"), col("xv"))
-          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      }
-    val foundSub: Map[Long, Double] =
-      if (subWants.isEmpty) Map.empty
-      else {
-        // candidate (bucket, sub-bucket) CELLS only — combined-key isin
-        // so pass-2 input is literally the narrowed cells
-        val cellKeys: Seq[Long] = subWants.toSeq.map { case (b, sb, _, _) =>
-          b.toLong * nBuckets + sb
-        }.distinct
-        rows.select(col("xv"), bCol.as("b"))
-          .filter(col("b").isin(splittable.map(_._1): _*))
-          .withColumn("sb", subBucketCol(splittable, nBuckets))
-          .filter((col("b").cast("long") * nBuckets + col("sb"))
-            .isin(cellKeys: _*))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("b", "sb").orderBy("xv")))
-          .join(broadcast(subWants.toSeq.toDF("wb", "wsb", "lr", "gr")),
-            col("b") === col("wb") && col("sb") === col("wsb") &&
-              col("rn") === col("lr"))
-          .select(col("gr"), col("xv"))
-          .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      }
-    val found = foundNormal ++ foundSub ++ direct
-    Some(positions.map { pos =>
-      val lo = found(math.floor(pos).toLong)
-      val hi = found(math.ceil(pos).toLong)
-      lo + (hi - lo) * (pos - math.floor(pos))
-    })
-    } finally { rows.unpersist(false); () }
+        val b = bounds.select(struct("_lo", "_hi")).scalar()
+        rows.withColumns(Map("_lo" -> b("_lo"), "_hi" -> b("_hi")))
+      }, "_b1")
+    def pos(p: Double) = lit(p) * (col("_n") - 1)
+    val ranks = array_distinct(array(ps.flatMap(p => Seq(floor(pos(p)), ceil(pos(p)))): _*))
+    // per group: the row count `_n`, and `_w`, each wanted rank's cell
+    val want1 = cut1.groupBy(cell.map(col): _*)
+      .agg(count(lit(1)).as("_c"), min("_x").as("_lo"), max("_x").as("_hi"))
+      .groupBy(keys: _*)
+      .agg(array_sort(array_agg(struct(col("_b1").as("_k"), col("_c"), col("_lo"),
+        col("_hi")))).as("_cells"))
+      .withColumn("_n", aggregate(col("_cells"), lit(0L), (a, x) => a + x("_c")))
+      .select(keys :+ col("_n") :+ transform(ranks, r => locate(col("_cells"), r)).as("_w"): _*)
+    // one row per cell whose min is below its max: its bounds and the
+    // (`_r`, `_l`) of the ranks in it
+    val open = filter(col("_w"), x => x("_lo") < x("_hi"))
+    val open1 = want1.select(keys :+ explode(transform(
+        array_distinct(transform(open, _("_k"))), k => {
+          val in = filter(open, _("_k") === k)
+          struct(k.as("_b1"), in(0)("_lo").as("_lo"), in(0)("_hi").as("_hi"),
+            transform(in, x => struct(x("_r").as("_r"), x("_l").as("_l"))).as("_w"))
+        })).as("_o"): _*)
+      .select(keys :+ col("_o.*"): _*)
+    // the open cells' rows, split again and hashed on their sub-cell
+    // once: the sub-cell counts and the window both read that shuffle
+    val cut2 = withCell(cut1.join(broadcast(open1), cell), "_b2")
+      .repartition(sub.map(col): _*)
+    // the sub-cells that hold a wanted rank, with the rows of their cell
+    // below them (counting `_x` keeps every column of cut2 in both reads,
+    // so they share one shuffle)
+    val want2 = cut2.groupBy((sub :+ "_w").map(col): _*).agg(count("_x").as("_c"))
+      .withColumn("_before", coalesce(sum("_c").over(Window.partitionBy(cell.map(col): _*)
+        .orderBy("_b2").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .filter(exists(col("_w"), x =>
+        x("_l") >= col("_before") && x("_l") < col("_before") + col("_c")))
+      .select((sub :+ "_before").map(col): _*)
+    val picked = cut2.join(broadcast(want2), sub)
+      .withColumn("_rn", row_number().over(Window.partitionBy(sub.map(col): _*).orderBy("_x")))
+      .select(keys :+ col("_x") :+ explode(filter(col("_w"), x =>
+        x("_l") === col("_before") + col("_rn") - 1)).as("_at"): _*)
+      .select(keys :+ lit(null).cast("long").as("_n") :+ col("_at._r") :+ col("_x").as("_v"): _*)
+    // per group its count, and a rank in a one-value cell is that value
+    val found = want1.select(keys :+ explode(concat(
+        array(struct(col("_n"), lit(null).cast("long").as("_r"),
+          lit(null).cast("double").as("_v"))),
+        transform(filter(col("_w"), x => x("_lo") === x("_hi")), x =>
+          struct(lit(null).cast("long").as("_n"), x("_r").as("_r"), x("_lo").as("_v")))))
+        .as("_f"): _*)
+      .select(keys :+ col("_f.*"): _*)
+      .union(picked)
+      .groupBy(keys: _*)
+      .agg(max("_n").as("_n"),
+        map_from_entries(array_agg(when(col("_r").isNotNull, struct("_r", "_v")))).as("_m"))
+    val q = ps.map { p =>
+      val (lo, hi) = (col("_m")(floor(pos(p))), col("_m")(ceil(pos(p))))
+      lo + (hi - lo) * (pos(p) - floor(pos(p)))
+    }
+    found.select(keys :+ array(q: _*).as("q"): _*)
   }
 
-  /** A candidate bucket is re-histogrammed when it holds ≥16× the
-    * uniform share (and enough absolute rows for a window partition
-    * to matter) — below that, pass 2's per-bucket partitions are
-    * already the O(n/nBuckets) the narrowing promises. */
-  private def skewCutoff(n: Long, nBuckets: Int): Long =
-    math.max(4096L, 16L * (n / nBuckets + 1))
+  /** `df` (with its range's bounds `_lo`, `_hi`) with `cell`, each
+    * row's equal-width cell of that range, in place of the bounds. */
+  private def withCell(df: DataFrame, cell: String): DataFrame =
+    df.withColumn(cell, when(col("_hi") > col("_lo"),
+        least(greatest(floor((col("_x") - col("_lo")) /
+          ((col("_hi") - col("_lo")) / cells)).cast("int"), lit(0)), lit(cells - 1)))
+        .otherwise(lit(0)))
+      .drop("_lo", "_hi")
 
-  /** Equal-width sub-bucket index INSIDE a splittable bucket's actual
-    * [min, max] — a CASE chain over the (few, ≤2·|ps|) splittable
-    * buckets; monotone in xv within each bucket, so sub-buckets hold
-    * contiguous bucket-local rank ranges (the same argument that makes
-    * the top-level histogram rank-addressable). */
-  private def subBucketCol(splittable: Seq[(Int, Double, Double)],
-      nBuckets: Int): Column =
-    splittable.foldLeft(lit(0): Column) { case (acc, (b, bmn, w)) =>
-      when(col("b") === b,
-        least(greatest(floor((col("xv") - lit(bmn)) / lit(w)).cast("int"),
-          lit(0)), lit(nBuckets - 1))).otherwise(acc)
-    }
-
-
-  /** [[subBucketCol]] with the group key in the CASE chain; emits −1
-    * for rows outside every splittable (group, bucket) cell so callers
-    * can filter them before aggregating. */
-  private def subBucketColGrouped(
-      splittable: Seq[((String, Int), Double, Double)],
-      nBuckets: Int): Column =
-    splittable.foldLeft(lit(-1): Column) {
-      case (acc, ((g, b), bmn, w)) =>
-        when(col("g") === g && col("b") === b,
-          least(greatest(floor((col("xv") - lit(bmn)) / lit(w)).cast("int"),
-            lit(0)), lit(nBuckets - 1))).otherwise(acc)
-    }
-
-  /** GROUPED two-pass histogram narrowing — [[histogramQuantiles]]
-    * with the group key carried through both passes. Pass 1: per-group
-    * (count, min, max) plus per-(group, equal-width-bucket) counts —
-    * codegen aggregates whose driver result is O(groups × buckets)
-    * longs (bounded: a profiling grain is dimension-sized). The driver
-    * locates every wanted order statistic as (group, bucket,
-    * local rank); pass 2 ranks ONLY the candidate (group, bucket)
-    * cells (broadcast semi-join + a window partitioned by group AND
-    * bucket — per-partition state ~n/nBuckets rows) and the driver
-    * interpolates the exact quantile_cont values. Emits one row per
-    * group with `names` columns rounded to 4. */
-  private[graft] def histogramQuantilesGrouped(df: DataFrame,
-      gCol: String, vCol: String, ps: Seq[Double], names: Seq[String],
-      nBuckets: Int = 2048): DataFrame = {
-    require(ps.length == 3 && names.length == 3,
-      "grouped narrowing emits the fixed 3-percentile profiling row")
-    import org.apache.spark.sql.expressions.Window
-    val s = df.sparkSession
-    import s.implicits._
-    // round 18: same single-computation persist as the global form —
-    // heads, bucket counts, skew bounds/sub-counts, and both pass-2
-    // rankings each re-ran the upstream otherwise
-    val rows = df.select(col(gCol).cast("string").as("g"),
-      col(vCol).cast("double").as("xv")).filter(col("xv").isNotNull)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    val heads = rows.groupBy("g").agg(count(lit(1)).as("n"),
-      min("xv").as("mn"), max("xv").as("mx")).collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2), r.getDouble(3))))
-      .toMap
-    val headsDf = broadcast(heads.toSeq.map { case (g, (n, mn, mx)) =>
-      (g, mn, if (mx > mn) (mx - mn) / nBuckets else 1.0)
-    }.toDF("g", "mn", "w"))
-    val bCol = least(greatest(
-      floor((col("xv") - col("mn")) / col("w")).cast("int"), lit(0)),
-      lit(nBuckets - 1))
-    val counts = rows.join(headsDf, "g")
-      .groupBy(col("g"), bCol.as("b")).agg(count(lit(1)).as("c"))
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
-    // per group: cumulative-below per bucket, then each wanted global
-    // 0-based rank r -> (bucket, 1-based local rank)
-    val wants = heads.toSeq.flatMap { case (g, (n, mn, mx)) =>
-      if (mn == mx) Seq.empty
-      else {
-        val cumBelow = new Array[Long](nBuckets)
-        var acc = 0L; var i = 0
-        while (i < nBuckets) {
-          cumBelow(i) = acc; acc += counts.getOrElse((g, i), 0L); i += 1
-        }
-        val ranks = ps.flatMap(p => { val pos = p * (n - 1)
-          Seq(math.floor(pos).toLong, math.ceil(pos).toLong) }).distinct
-        ranks.map { r =>
-          var bi = nBuckets - 1
-          while (bi > 0 && (cumBelow(bi) > r || !counts.contains((g, bi))))
-            bi -= 1
-          (g, bi, r - cumBelow(bi) + 1, r)
-        }
-      }
-    }
-    // one-level skew recursion per (group, bucket) cell — the global
-    // form's discipline with the group key carried through: an
-    // overfull cell re-histograms inside its actual [min, max]; an
-    // all-one-value cell resolves directly from the bounds pass
-    val byCell = wants.groupBy(w => (w._1, w._2))
-    val overfullCells = byCell.keys.toSeq.filter { case (g, b) =>
-      counts.getOrElse((g, b), 0L) > skewCutoff(heads(g)._1, nBuckets)
-    }.sorted
-    val direct = scala.collection.mutable.Map.empty[(String, Long), Double]
-    val subWants = scala.collection.mutable
-      .ArrayBuffer.empty[(String, Int, Int, Long, Long)]
-    var splittable = Seq.empty[((String, Int), Double, Double)]
-    if (overfullCells.nonEmpty) {
-      val ofDf = broadcast(overfullCells.toDF("cg", "cb"))
-      val bounds = rows.join(headsDf, "g")
-        .select(col("g"), col("xv"), bCol.as("b"))
-        .join(ofDf, col("g") === col("cg") && col("b") === col("cb"),
-          "left_semi")
-        .groupBy("g", "b").agg(min("xv").as("bmn"), max("xv").as("bmx"))
-        .collect()
-        .map(r => (r.getString(0), r.getInt(1))
-          -> ((r.getDouble(2), r.getDouble(3)))).toMap
-      overfullCells.foreach { case cell @ (g, b) =>
-        val (bmn, bmx) = bounds(cell)
-        if (bmn == bmx)
-          byCell(cell).foreach { case (_, _, _, gr) => direct((g, gr)) = bmn }
-      }
-      splittable = overfullCells.flatMap { cell =>
-        val (bmn, bmx) = bounds(cell)
-        if (bmn < bmx) Some((cell, bmn, (bmx - bmn) / nBuckets)) else None
-      }
-      if (splittable.nonEmpty) {
-        val subCounts = rows.join(headsDf, "g")
-          .select(col("g"), col("xv"), bCol.as("b"))
-          .withColumn("sb", subBucketColGrouped(splittable, nBuckets))
-          .filter(col("sb") >= 0)
-          .groupBy("g", "b", "sb").agg(count(lit(1)).as("c"))
-          .collect()
-          .map(r => (r.getString(0), r.getInt(1), r.getInt(2))
-            -> r.getLong(3)).toMap
-        splittable.foreach { case (cell @ (g, b), _, _) =>
-          val cumSub = new Array[Long](nBuckets)
-          var acc2 = 0L; var j = 0
-          while (j < nBuckets) {
-            cumSub(j) = acc2
-            acc2 += subCounts.getOrElse((g, b, j), 0L); j += 1
-          }
-          byCell(cell).foreach { case (_, _, lr, gr) =>
-            val r0 = lr - 1
-            var sj = nBuckets - 1
-            while (sj > 0 &&
-                (cumSub(sj) > r0 || !subCounts.contains((g, b, sj))))
-              sj -= 1
-            subWants += ((g, b, sj, r0 - cumSub(sj) + 1, gr))
-          }
-        }
-      }
-    }
-    val normalWants = wants.filterNot(w =>
-      overfullCells.contains((w._1, w._2)))
-    val foundNormal: Map[(String, Long), Double] =
-      if (normalWants.isEmpty) Map.empty
-      else {
-        val wantsDf = broadcast(normalWants.toDF("wg", "wb", "lr", "gr"))
-        // restrict to candidate cells with a SEMI join (two wanted
-        // ranks can share a bucket — an inner join here would
-        // duplicate its rows and corrupt the local ranking)
-        val cand = broadcast(normalWants.map(w => (w._1, w._2)).distinct
-          .toDF("cg", "cb"))
-        rows.join(headsDf, "g").select(col("g"), col("xv"), bCol.as("b"))
-          .join(cand, col("g") === col("cg") && col("b") === col("cb"),
-            "left_semi")
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("g", "b").orderBy("xv")))
-          .join(wantsDf,
-            col("g") === col("wg") && col("b") === col("wb") &&
-              col("rn") === col("lr"))
-          .select(col("g"), col("gr"), col("xv"))
-          .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2))
-          .toMap
-      }
-    val foundSub: Map[(String, Long), Double] =
-      if (subWants.isEmpty) Map.empty
-      else {
-        val swDf = broadcast(subWants.toSeq.toDF("wg", "wb", "wsb", "lr", "gr"))
-        val cells = broadcast(subWants.map(w => (w._1, w._2, w._3)).distinct
-          .toSeq.toDF("cg", "cb", "csb"))
-        rows.join(headsDf, "g").select(col("g"), col("xv"), bCol.as("b"))
-          .withColumn("sb", subBucketColGrouped(splittable, nBuckets))
-          .join(cells, col("g") === col("cg") && col("b") === col("cb") &&
-            col("sb") === col("csb"), "left_semi")
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("g", "b", "sb").orderBy("xv")))
-          .join(swDf,
-            col("g") === col("wg") && col("b") === col("wb") &&
-              col("sb") === col("wsb") && col("rn") === col("lr"))
-          .select(col("g"), col("gr"), col("xv"))
-          .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getDouble(2))
-          .toMap
-      }
-    val found = foundNormal ++ foundSub ++ direct
-    val out = heads.toSeq.map { case (g, (n, mn, mx)) =>
-      val cells = ps.map { p =>
-        if (mn == mx) mn
-        else {
-          val pos = p * (n - 1)
-          val lo = found((g, math.floor(pos).toLong))
-          val hi = found((g, math.ceil(pos).toLong))
-          lo + (hi - lo) * (pos - math.floor(pos))
-        }
-      }
-      (g, cells)
-    }
-    out.map { case (g, cs) => (g, cs(0), cs(1), cs(2)) }
-      .toDF(gCol, "c1", "c2", "c3")
-      .select(col(gCol) +: names.zipWithIndex.map { case (nm, ix) =>
-        round(col(s"c${ix + 1}"), 4).as(nm)
-      }: _*)
-    } finally { rows.unpersist(false); () }
-  }
+  /** The cell of `grid` — (`_k`, count `_c`, `_lo`, `_hi`) structs in
+    * cell order `_k` — that holds the 0-based rank `r`: (`_r`, its `_k`,
+    * `_l`, the rank inside it, and its `_lo`, `_hi`). */
+  private def locate(grid: Column, r: Column): Column =
+    aggregate(grid,
+      struct(lit(0L).as("seen"),
+        lit(null).cast("struct<_r:bigint,_k:int,_l:bigint,_lo:double,_hi:double>").as("at")),
+      (acc, x) => {
+        val seen = acc("seen") + x("_c")
+        struct(seen.as("seen"), when(acc("at").isNull && r < seen,
+          struct(r.as("_r"), x("_k").as("_k"), (r - acc("seen")).as("_l"),
+            x("_lo").as("_lo"), x("_hi").as("_hi"))).otherwise(acc("at")).as("at"))
+      },
+      acc => acc("at"))
 
   /** Emit a quantile cell row with the repo's round-4 presentation —
-    * shared by the narrowing and RDD-selection quantile forms. */
+    * the RDD-selection form's. */
   private def emitQuantiles(s: SparkSession, cells: Option[Seq[Double]],
       names: Seq[String], emptySrc: DataFrame): DataFrame = {
     import s.implicits._
@@ -1020,30 +771,27 @@ object RelationalQueries extends QueryModule {
 
   /** Equi-DEPTH histogram (the equi-width q_histogram's sibling and
     * the optimizer-statistics shape): 10 buckets holding ~equal row
-    * counts, bounded by exact decile cutoffs. Like q_rfm, the cutoffs
-    * come from ONE percentile aggregate broadcast back as a 1-row
-    * cross join — no global sort, no single-partition ntile; the
-    * bucket id is the count of cutoffs the value exceeds (values
-    * exactly on a cutoff go down, matching the oracle's strict
-    * comparison). Bucket counts differ from n/10 only by cutoff-tie
-    * mass — exactly the skew an optimizer histogram exists to show.
+    * counts, bounded by exact decile cutoffs — no global sort, no
+    * single-partition ntile; the bucket id is the count of cutoffs the
+    * value exceeds (values exactly on a cutoff go down, matching the
+    * oracle's strict comparison). Bucket counts differ from n/10 only
+    * by cutoff-tie mass — exactly the skew an optimizer histogram
+    * exists to show.
     *
-    * Cutoffs come from the SELECTION-form exact quantile pass
-    * (selectQuantiles — spillable range-partitioned sort + two order
-    * statistics per cutoff), not the value-buffering percentile
-    * aggregate, and ship back as plan literals; engine/oracle cutoff
-    * agreement is safe because an interpolated cutoff lies strictly
-    * between two ADJACENT order statistics, an open interval that by
-    * construction contains no data value — a last-ulp cutoff
-    * difference cannot flip any row's bucket. */
+    * The cutoffs are one scalar subquery over the exact histogram
+    * narrowing ([[exactQuantiles]]), not the value-buffering
+    * percentile aggregate; engine/oracle cutoff agreement is safe
+    * because an interpolated cutoff lies strictly between two ADJACENT
+    * order statistics, an open interval that by construction contains
+    * no data value — a last-ulp cutoff difference cannot flip any
+    * row's bucket. */
   private val histogramEqdepth: Q = (s, d) => {
     val o = Tables.orders(s, d)
-    val cuts = histogramQuantiles(o.select(col("o_totalprice")),
-      "o_totalprice", (1 to 9).map(_ / 10.0))
-      .getOrElse(sys.error("histogram_eqdepth: empty orders"))
-    val bucket = cuts.map(c =>
-      (col("o_totalprice") > lit(c)).cast("int")).reduce(_ + _)
-    o.groupBy(bucket.as("bucket"))
+    val deciles = (1 to 9).map(_ / 10.0)
+    val bucket = deciles.indices.map(i =>
+      (col("o_totalprice") > col("cuts")(i)).cast("int")).reduce(_ + _)
+    o.withColumn("cuts", exactQuantiles(o, "o_totalprice", deciles).select("q").scalar())
+      .groupBy(bucket.as("bucket"))
       .agg(count(lit(1)).as("n"),
         round(min("o_totalprice"), 2).as("lo"),
         round(max("o_totalprice"), 2).as("hi"))
@@ -1084,24 +832,24 @@ object RelationalQueries extends QueryModule {
     * decile cutoffs and report each bin's contribution to
     * PSI = Σ (q−p)·ln(q/p) — the number a model-serving pipeline
     * watches to decide when to retrain. Periods are the deterministic
-    * even/odd orderkey split. Cutoffs from the selection-form exact
-    * quantile pass over the reference slice (see q_histogram_eqdepth's
-    * scaladoc for the literal-cutoff safety argument — measured
-    * 1.74 s → selection form at sf0.1, and the 10×-growth outlier this
-    * query showed with the buffering percentile is gone), then one
-    * map-side-combined bin count carrying both periods in a single
-    * scan (conditional sums, not two passes), proportions via window
-    * sums over the 10-row bin table. */
+    * even/odd orderkey split. Cutoffs from the exact histogram
+    * narrowing ([[exactQuantiles]]) over the reference slice, read as
+    * one scalar subquery (see q_histogram_eqdepth's scaladoc for the
+    * cutoff safety argument; the 10×-growth outlier this query showed
+    * with the buffering percentile is gone), then one map-side-combined
+    * bin count carrying both periods in a single scan (conditional
+    * sums, not two passes), proportions via window sums over the
+    * 10-row bin table. */
   private val psiDrift: Q = (s, d) => {
     val o = Tables.orders(s, d).select(col("o_totalprice").as("v"),
       (col("o_orderkey") % 2 === 0).as("is_ref"))
-    val cuts = histogramQuantiles(o.filter(col("is_ref")).select(col("v")),
-      "v", (1 to 9).map(_ / 10.0))
-      .getOrElse(sys.error("psi_drift: empty reference period"))
-    val bucket = cuts.map(c =>
-      (col("v") > lit(c)).cast("int")).reduce(_ + _)
+    val deciles = (1 to 9).map(_ / 10.0)
+    val bucket = deciles.indices.map(i =>
+      (col("v") > col("cuts")(i)).cast("int")).reduce(_ + _)
     val wall = Window.partitionBy()
-    o.groupBy(bucket.as("bin"))
+    o.withColumn("cuts", exactQuantiles(o.filter(col("is_ref")), "v", deciles)
+        .select("q").scalar())
+      .groupBy(bucket.as("bin"))
       .agg(
         sum(when(col("is_ref"), 1L).otherwise(0L)).as("n_ref"),
         sum(when(!col("is_ref"), 1L).otherwise(0L)).as("n_cur"))

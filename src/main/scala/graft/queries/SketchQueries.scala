@@ -32,17 +32,15 @@ object SketchQueries extends QueryModule {
     * twins' error pins. Plan-shape notes (both measured at sf0.1):
     * count(DISTINCT) in the same aggregate as the percentile family
     * forces an Expand that drags every scan row through the percentile
-    * buffers (13.4 s fused vs ~3 s split); and the exact quantiles use
-    * the shared selection-form machinery (RelationalQueries
-    * .selectQuantiles — the q_quantiles_sel scale path) instead of the
-    * buffer-every-value `percentile` aggregate, so the only declarative
-    * aggregates left are the mergeable sketches plus one distinct. */
+    * buffers (13.4 s fused vs ~3 s split); and the exact quantiles are
+    * one scalar subquery over the shared histogram narrowing
+    * ([[RelationalQueries.exactQuantiles]], the q_quantiles path)
+    * instead of the buffer-every-value `percentile` aggregate, so the
+    * only declarative aggregates left are the mergeable sketches plus
+    * one distinct. */
   private val sketchError: Q = (s, d) => {
     val li = Tables.lineitem(s, d)
-    val exact = RelationalQueries
-      .histogramQuantiles(li, "l_extendedprice", Seq(0.5, 0.9))
-      .getOrElse(Seq(Double.NaN, Double.NaN))
-    val (p50x, p90x) = (exact(0), exact(1))
+    val (p50x, p90x) = (col("exact")(0), col("exact")(1))
     val distincts = li.agg(
       count_distinct(col("l_partkey")).as("n_parts"),
       approx_count_distinct(col("l_partkey"), 0.05).as("adc"))
@@ -50,13 +48,15 @@ object SketchQueries extends QueryModule {
       expr("approx_percentile(l_extendedprice, 0.5D, 10000)").as("ap50"),
       expr("approx_percentile(l_extendedprice, 0.9D, 10000)").as("ap90"))
     distincts.crossJoin(broadcast(approxQ))
+      .withColumn("exact", RelationalQueries
+        .exactQuantiles(li, "l_extendedprice", Seq(0.5, 0.9)).select("q").scalar())
       .select(
         col("n_parts"),
-        round(lit(p50x), 4).as("p50"),
-        round(lit(p90x), 4).as("p90"),
+        round(p50x, 4).as("p50"),
+        round(p90x, 4).as("p90"),
         (abs(col("adc") - col("n_parts")) <= col("n_parts") * 0.05).as("hll_ok"),
-        (abs(col("ap50") - lit(p50x)) <= lit(p50x) * 0.005).as("p50_ok"),
-        (abs(col("ap90") - lit(p90x)) <= lit(p90x) * 0.005).as("p90_ok"))
+        (abs(col("ap50") - p50x) <= p50x * 0.005).as("p50_ok"),
+        (abs(col("ap90") - p90x) <= p90x * 0.005).as("p90_ok"))
   }
 
   /** Distinct buyers per year via MERGED month-level HLL sketches
@@ -130,18 +130,15 @@ object SketchQueries extends QueryModule {
     * oracle recomputes from scratch. The bucket pick is the pure
     * integer compare cum·100 ≥ q100·n (no float rank); the cumulative
     * scan runs on the ~35-row bucket grid. The exact anchors come from
-    * the shared two-pass histogram narrowing
-    * ([[RelationalQueries.histogramQuantiles]], the q_quantiles scale
-    * path — round 15 moved the sketch family off the selection form:
-    * same exact order statistics, 1.2 → ~0.6 s at sf0.1) — a
-    * `percentile` aggregate here buffered every value and read 8.5×
-    * between SFs; the narrowing keeps the query sub-linear. */
+    * the shared histogram narrowing
+    * ([[RelationalQueries.exactQuantiles]], the q_quantiles path, read
+    * as one scalar subquery) — a `percentile` aggregate here buffered
+    * every value and read 8.5× between SFs; the narrowing keeps the
+    * query sub-linear. */
   private val hdrQuantiles: Q = (s, d) => {
     import org.apache.spark.sql.expressions.Window
     val v = Tables.lineitem(s, d)
       .select(round(col("l_extendedprice") * 100).cast("long").as("c"))
-    val qs = RelationalQueries.histogramQuantiles(v, "c", Seq(0.5, 0.9, 0.99))
-      .getOrElse(Seq(0.0, 0.0, 0.0))
     val b = v.groupBy(length(bin(col("c"))).cast("long").as("bucket"))
       .agg(count(lit(1)).as("n"))
     val w = Window.orderBy("bucket")
@@ -154,10 +151,13 @@ object SketchQueries extends QueryModule {
     val lo = expr("shiftleft(1L, cast(bucket - 1 as int))")
     val hi = expr("shiftleft(1L, cast(bucket as int))") - 1
     val est = (lo + hi).cast("double") / 200.0
-    val ex = when(col("q100") === 50, lit(qs(0)))
-      .when(col("q100") === 90, lit(qs(1)))
-      .otherwise(lit(qs(2))) / 100.0
-    picked.select(col("q100"), col("bucket"),
+    val ex = when(col("q100") === 50, col("qs")(0))
+      .when(col("q100") === 90, col("qs")(1))
+      .otherwise(col("qs")(2)) / 100.0
+    picked
+      .withColumn("qs", RelationalQueries.exactQuantiles(v, "c", Seq(0.5, 0.9, 0.99))
+        .select("q").scalar())
+      .select(col("q100"), col("bucket"),
       round(est, 4).as("est_usd"),
       round(ex, 4).as("exact_usd"),
       (est <= ex * 2 && ex <= est * 2).as("within_2x"))

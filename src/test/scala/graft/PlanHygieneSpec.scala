@@ -38,10 +38,10 @@ class PlanHygieneSpec extends SparkSpec {
     "q_ransac_line",
     // round 9: 1-row aggregate broadcasts (sketch pins, graph scalars)
     "q_sketch_error", "q_triangles",
-    // round 9 late: 1-row exact-quantile-cutoff broadcasts (the rfm /
-    // equi-depth scoring joins) and the 7-day rolling-DAU range join
-    // against the broadcast day spine (dimension-sized by construction)
-    "q_rfm", "q_histogram_eqdepth", "q_rolling_distinct",
+    // round 9 late: the 1-row exact-quantile-cutoff broadcast (the rfm
+    // scoring join) and the 7-day rolling-DAU range join against the
+    // broadcast day spine (dimension-sized by construction)
+    "q_rfm", "q_rolling_distinct",
     // round 9 late: 1-row broadcast — the overlap sketch's estimate row
     "q_overlap_sketch",
     // round 10: the order-count total rides into the rule metrics as

@@ -124,12 +124,13 @@ class RelationalQueriesSpec extends SparkSpec {
   test("selection-form global quantiles equal the buffered percentile form") {
     // same statistic through a completely different physical plan:
     // range-sorted distributed selection (8 order statistics to the
-    // driver) vs one buffered percentile aggregate
+    // driver) vs the in-plan histogram narrowing of q_quantiles (the
+    // name predates it: q_quantiles buffered a percentile aggregate)
     val sel = run("q_quantiles_sel").head()
-    val buf = run("q_quantiles").head()
+    val hist = run("q_quantiles").head()
     (0 until 4).foreach { i =>
-      assert(sel.getDouble(i) == buf.getDouble(i),
-        s"col $i: selection ${sel.getDouble(i)} vs buffered ${buf.getDouble(i)}")
+      assert(sel.getDouble(i) == hist.getDouble(i),
+        s"col $i: selection ${sel.getDouble(i)} vs narrowing ${hist.getDouble(i)}")
     }
   }
 

@@ -61,6 +61,17 @@ class TablesSpec extends SparkSpec {
     assert(!Tables.table(spark, d, "single").columns.contains("extra"))
   }
 
+  test("a session's second round of reads over the ten tables infers no schema") {
+    val d = tmpDir("graft-tables-session")
+    Tables.names.foreach { n =>
+      Files.copy(new java.io.File(s"$sf/$n.parquet").toPath, new java.io.File(s"$d/$n.parquet").toPath)
+    }
+    val s = spark.newSession()
+    def readAll(): Unit = Tables.names.foreach(n => Tables.read(s, d, n))
+    assert(jobsDuring(readAll()) > 0, "the first round must infer")
+    assert(jobsDuring(readAll()) == 0)
+  }
+
   test("flipping nanosAsLong gives events its own memo entry") {
     val d = tmpDir("graft-tables-nanos")
     Files.copy(new java.io.File(s"$sf/events.parquet").toPath,
