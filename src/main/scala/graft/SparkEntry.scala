@@ -6,11 +6,11 @@ import graft.queries._
 
 /** Driver contract — see SURVEY.md §7.0 + the builder prompt.
   *
-  * `queries`, `oracleSql` and `noOracle` are derived from `modules`;
-  * each name is one operator from SURVEY.md §2's inventory. `oracleSql`
-  * carries the DuckDB-equivalent ANSI SQL for every query whose
-  * semantics are SQL-expressible; the DuckDB compare hash-checks both
-  * result sets at sf0.01.
+  * `queries`, `oracleSql`, `noOracle`, `buildJobs` and `untimed` are
+  * derived from `modules`; each name is one operator from SURVEY.md
+  * §2's inventory. `oracleSql` carries the DuckDB-equivalent ANSI SQL
+  * for every query whose semantics are SQL-expressible; the DuckDB
+  * compare hash-checks both result sets at sf0.01.
   */
 object SparkEntry {
 
@@ -40,14 +40,14 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = catalog.queries
 
-  /** Queries excluded from Bench's TIMED set (they still run in Verify
-    * and keep their correctness checks). q_dedup_minhash_mllib is a
-    * compatibility demo of MLlib's MinHashLSH surface whose cost is
-    * internal to approxSimilarityJoin (measured: pre-transform/persist
-    * does not help) — nobody would run it at scale when the native
-    * banded q_dedup_minhash twin is 3× faster, so letting it dominate
-    * the bench total would misstate the engine's scale posture. */
-  val untimed: Set[String] = Set("q_dedup_minhash_mllib")
+  /** Queries Bench leaves out of its timed set (each module's
+    * `untimed` facts); they still run in Verify. */
+  def untimed: Set[String] = catalog.untimed.keySet
+
+  /** Query name → the driver step that makes its build start a Spark
+    * job (each module's `buildJobs` facts); every other builder starts
+    * none. */
+  def buildJobs: Map[String, String] = catalog.buildJobs
 
   /** DuckDB-runnable ANSI SQL per query (same parquet tables, registered
     * under their bare table names). */

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.graftshim
 
@@ -27,9 +27,10 @@ object BloomFilters {
     graftshim.toColumn(new BloomFilterAggregate(
       graftshim.toExpression(c), expectedItems).toAggregateExpression())
 
-  /** Membership probe against a driver-held filter (a plan literal —
-    * broadcast once with the plan, like the LSH hyperplanes). */
-  def mightContain(bloom: Array[Byte], c: Column): Column =
+  /** Membership probe against a filter that is a literal or a scalar
+    * subquery over [[bloomAgg]] (`Dataset.scalar()`, the shape of
+    * Spark's own runtime filter: evaluated once when the plan runs). */
+  def mightContain(bloom: Column, c: Column): Column =
     graftshim.toColumn(BloomFilterMightContain(
-      Literal(bloom), graftshim.toExpression(c)))
+      graftshim.toExpression(bloom), graftshim.toExpression(c)))
 }

@@ -45,9 +45,17 @@ object CorpusLayout {
     * downstream prunes at the DIRECTORY level (PartitionFilters in the
     * scan, zero I/O for other langs) — assert with
     * `CorpusLayoutSpec`. `basePath` keeps the schema stable whether the
-    * caller points at the root or a single lang subdirectory. */
+    * caller points at the root or a single lang subdirectory. The
+    * schema is inferred once per path (as [[graft.Tables.table]] does),
+    * so a build starts no job: [[ensureLayout]]'s paths end in the data
+    * version, and an append adds lang partitions, not columns. */
   def readDocuments(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("basePath", path).parquet(path)
+    spark.read.schema(schemas.computeIfAbsent(path,
+        _ => spark.read.option("basePath", path).parquet(path).schema))
+      .option("basePath", path).parquet(path)
+
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
   private val layouts =
     new java.util.concurrent.ConcurrentHashMap[(String, String), String]()

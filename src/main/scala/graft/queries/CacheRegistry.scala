@@ -7,8 +7,9 @@ import org.apache.spark.sql.DataFrame
   * Several builders persist an intermediate that several branches of
   * the returned plan read — link-prediction's shared adjacency, the
   * per-round frontiers of the iterative graph queries — or that a
-  * bounded build-time collect reads before the caller materializes the
-  * returned DataFrame. The builder cannot unpersist in a finally block
+  * declared build-job builder (`QueryModule.buildJobs`, e.g. q_kcore's
+  * peel rounds) reads before the caller materializes the returned
+  * DataFrame. The builder cannot unpersist in a finally block
   * without discarding the cache before the caller ever runs the plan,
   * so instead each such persist is REGISTERED here and the harness
   * (Verify / Bench / specs) drains the registry once the query's

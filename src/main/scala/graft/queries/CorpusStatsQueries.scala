@@ -554,6 +554,11 @@ object CorpusStatsQueries extends QueryModule {
   override val noOracle: Map[String, String] = Map(
     "q_pca_project" -> "no eigensolver in SQL; q_pca_var_explained and PcaSpec check it")
 
+  override val buildJobs: Map[String, String] = Map(
+    "q_pca_project" -> "the covariance eigendecomposition runs on the driver (Pca.fit)",
+    "q_pca_var_explained" -> "the covariance eigendecomposition runs on the driver (Pca.fit)",
+    "q_pca_variance" -> "the covariance eigendecomposition runs on the driver (Pca.fit)")
+
   val oracles: Map[String, String] = Map(
     // per-doc ratio micro-scaled by integer division, exact sums;
     // one mirrored division per source

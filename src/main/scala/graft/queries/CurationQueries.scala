@@ -503,6 +503,10 @@ object CurationQueries extends QueryModule {
     "q_bpe_merges" -> "learned merges; q_bpe_first_merge and BpeSpec pin them",
     "q_bpe_encode" -> "uses the learned merges; q_bpe_encode_pin and BpeSpec check it")
 
+  override val buildJobs: Map[String, String] = Map(
+    "q_bpe_merges" -> "each merge round brings its argmax pair to the driver",
+    "q_bpe_first_merge" -> "each merge round brings its argmax pair to the driver")
+
   val oracles: Map[String, String] = Map(
     // identical space-joined bigram keys; add-0.5 smoothing over the
     // sparse observed-bigram state; perplexity from the same mean

@@ -114,23 +114,22 @@ object GraphQueries extends QueryModule {
     * engines agree far below the rounding grain. */
   private val pageRank: Q = (s, d) => {
     val edges = purchaseEdges(s, d)
-    // deg doubles as the node list: its count is the node count (one
-    // O(1) scalar to the driver), its keys seed rank0 — no separate
-    // countDistinct or distinct() shuffle.
+    // deg doubles as the node list: its count is the node count, its
+    // keys seed rank0 — no separate countDistinct or distinct() shuffle
     val deg = CacheRegistry.register(
       edges.groupBy("src").agg(count(lit(1)).as("outdeg")).persist())
-    val n = deg.count()
-    require(n > 0, "pagerank: empty edge list (no orders⋈lineitem rows)")
     // NOT persisted: re-running the edges⋈deg hash join from the two
     // already-cached inputs each round measured CHEAPER than
     // materializing the joined relation (2.48 vs 2.69 s solo at sf0.1)
     val withDeg = edges.join(deg, "src")
-    // 0.15 literal, not (1.0 - 0.85): the doubles differ in the last ulp
-    // and the oracle writes the literal.
-    val teleport = 0.15 / n
-
-    var ranks = deg.select(col("src").as("node"))
-      .withColumn("rank", lit(1.0 / n))
+    // the node count `n` rides on every rank row, so its scalar
+    // subquery runs once, in the first round; an empty graph fails then
+    val n = deg.agg(count(lit(1)).as("n"))
+      .select(when(col("n") > 0, col("n"))
+        .otherwise(raise_error(lit("pagerank: empty edge list (no orders⋈lineitem rows)"))))
+      .scalar()
+    var ranks = deg.select(col("src").as("node"), n.as("n"))
+      .withColumn("rank", lit(1.0) / col("n"))
     for (_ <- 1 to Iterations) {
       // persist, not localCheckpoint: at 3 fixed rounds the plan stays
       // shallow and the checkpoint's eager materialization cost is the
@@ -140,15 +139,16 @@ object GraphQueries extends QueryModule {
         withDeg
           .join(ranks, col("src") === col("node"))
           .groupBy(col("dst").as("node2"))
-          .agg(sum(col("rank") / col("outdeg")).as("contrib"))
-          .select(col("node2").as("node"),
-            (lit(teleport) + lit(Damping) * col("contrib")).as("rank"))
+          .agg(sum(col("rank") / col("outdeg")).as("contrib"), max("n").as("n"))
+          // 0.15 literal, not (1.0 - 0.85): the doubles differ in the
+          // last ulp and the oracle writes the literal
+          .select(col("node2").as("node"), col("n"),
+            (lit(0.15) / col("n") + lit(Damping) * col("contrib")).as("rank"))
           .persist())
     }
-    val out = ranks
-      .select(col("node"), round(col("rank") * n, 6).as("pr"))
+    ranks
+      .select(col("node"), round(col("rank") * col("n"), 6).as("pr"))
       .orderBy("node")
-    out
   }
 
   /** Personalized PageRank from the q_bfs_khop seed set (customers
@@ -176,30 +176,35 @@ object GraphQueries extends QueryModule {
     val edges = purchaseEdges(s, d)
     val deg = CacheRegistry.register(
       edges.groupBy("src").agg(count(lit(1)).as("outdeg")).persist())
-    val n = deg.count()
-    require(n > 0, "ppr: empty edge list (no orders⋈lineitem rows)")
+    val isSeed = col("src") >= 0 && col("src") % 100 === 1
+    // the node and seed counts ride on every seed and rank row: one
+    // scalar subquery over deg, which fails when the plan runs on an
+    // empty graph or seed set
+    val counts = deg.agg(count(lit(1)).as("n"), count_if(isSeed).as("nS"))
+      .select(when(col("n") === 0,
+          raise_error(lit("ppr: empty edge list (no orders⋈lineitem rows)")))
+        .when(col("nS") === 0, raise_error(lit("ppr: empty seed set (no custkey ≡ 1 mod 100)")))
+        .otherwise(struct("n", "nS")))
+      .scalar()
     val seeds = CacheRegistry.register(
-      deg.filter(col("src") >= 0 && col("src") % 100 === 1)
-        .select(col("src").as("node")).persist())
-    val nS = seeds.count()
-    require(nS > 0, "ppr: empty seed set (no custkey ≡ 1 mod 100)")
+      deg.filter(isSeed).select(col("src").as("node"), counts.as("c")).persist())
     val withDeg = edges.join(deg, "src")
-    var ranks = seeds.withColumn("rank", lit(1.0 / nS))
+    var ranks = seeds.select(col("node"), col("c.n").as("n"), (lit(1.0) / col("c.nS")).as("rank"))
     for (_ <- 1 to Iterations) {
       val contrib = withDeg
         .join(ranks, col("src") === col("node"))
         .groupBy(col("dst").as("node2"))
-        .agg((lit(Damping) * sum(col("rank") / col("outdeg"))).as("r"))
-        .select(col("node2").as("node"), col("r"))
+        .agg((lit(Damping) * sum(col("rank") / col("outdeg"))).as("r"), max("n").as("n"))
+        .select(col("node2").as("node"), col("r"), col("n"))
       ranks = CacheRegistry.register(
         contrib
           .unionByName(seeds.select(col("node"),
-            lit(0.15 / nS).as("r")))
-          .groupBy("node").agg(sum("r").as("rank"))
+            (lit(0.15) / col("c.nS")).as("r"), col("c.n").as("n")))
+          .groupBy("node").agg(sum("r").as("rank"), max("n").as("n"))
           .persist())
     }
     ranks
-      .select(col("node"), round(col("rank") * n, 6).as("ppr"))
+      .select(col("node"), round(col("rank") * col("n"), 6).as("ppr"))
       .orderBy("node")
   }
 
@@ -753,6 +758,9 @@ object GraphQueries extends QueryModule {
     "q_sssp" -> sssp,
     "q_label_prop" -> labelProp,
   )
+
+  override val buildJobs: Map[String, String] = Map(
+    "q_kcore" -> "each peel round counts its surviving nodes on the driver")
 
   val oracles: Map[String, String] = Map(
     // per-node triangle counts by exploding each canonical triangle

@@ -1,8 +1,7 @@
 package graft.queries
 
 import java.io.File
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{Column, SparkSession}
@@ -73,9 +72,9 @@ object OpqIndex {
   def codebooks(s: SparkSession, d: String): PqIndex.Codebooks =
     bookCache.computeIfAbsent(cacheKey(s, d), key => {
       val p = artifactPath(s, key, "opq-books")
-      loadBooks(p).getOrElse {
+      PqIndex.load(p).getOrElse {
         val books = fitBooks(s, d, rotation(s, d))
-        saveBooks(p, books)
+        PqIndex.save(p, books)
         books
       }
     })
@@ -153,13 +152,14 @@ object OpqIndex {
     }
   }
 
-  // --- text artifacts, the PqIndex atomic-rename scheme ---
+  // --- the rotation's text artifact, in PqIndex's atomic-rename
+  // scheme (the codebooks use PqIndex's own format) ---
 
   private def saveMatrix(p: String, r: Rotation): Unit = {
     val sb = new StringBuilder
     sb.append(r.length).append(' ').append(r(0).length).append('\n')
     r.foreach(row => sb.append(row.mkString(" ")).append('\n'))
-    atomicWrite(p, sb.toString)
+    PqIndex.atomicWrite(p, sb.toString)
   }
 
   private def loadMatrix(p: String, nr: Int, nc: Int): Option[Rotation] = {
@@ -174,46 +174,5 @@ object OpqIndex {
         row
       })
     } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  private def saveBooks(p: String, books: PqIndex.Codebooks): Unit = {
-    val sb = new StringBuilder
-    sb.append(PqIndex.numSub).append(' ').append(PqIndex.subDim).append('\n')
-    books.foreach { book =>
-      sb.append(book.length).append('\n')
-      book.foreach(c => sb.append(c.mkString(" ")).append('\n'))
-    }
-    atomicWrite(p, sb.toString)
-  }
-
-  private def loadBooks(p: String): Option[PqIndex.Codebooks] = {
-    if (!new File(p).exists()) return None
-    try {
-      val lines = Files.readAllLines(Paths.get(p)).toArray(Array.empty[String])
-      val Array(m, dim) = lines(0).split(' ').map(_.toInt)
-      require(m == PqIndex.numSub && dim == PqIndex.subDim,
-        s"opq books shape $m x $dim")
-      var i = 1
-      Some((0 until m).toArray.map { _ =>
-        val k = lines(i).toInt
-        i += 1
-        (0 until k).toArray.map { _ =>
-          val c = lines(i).split(' ').map(_.toDouble)
-          i += 1
-          require(c.length == PqIndex.subDim, s"opq centroid arity ${c.length}")
-          c
-        }
-      })
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  private def atomicWrite(p: String, content: String): Unit = {
-    val target = Paths.get(p)
-    Files.createDirectories(target.getParent)
-    val tmp = Paths.get(p + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
-    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    ()
   }
 }

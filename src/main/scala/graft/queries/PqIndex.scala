@@ -100,23 +100,29 @@ object PqIndex {
     * Double.toString round-trips exactly, so a cold load is
     * bit-identical to the fitted codebooks. Written to a temp file and
     * atomically renamed so a crashed save can't half-write (a corrupt
-    * artifact is detected by the parser and refit). */
-  private def save(p: String, books: Codebooks): Unit = {
+    * artifact is detected by the parser and refit). [[OpqIndex]] stores
+    * its rotated codebooks the same way. */
+  private[queries] def save(p: String, books: Codebooks): Unit = {
     val sb = new StringBuilder
     sb.append(numSub).append(' ').append(subDim).append('\n')
     books.foreach { book =>
       sb.append(book.length).append('\n')
       book.foreach { c => sb.append(c.mkString(" ")).append('\n') }
     }
+    atomicWrite(p, sb.toString)
+  }
+
+  private[queries] def atomicWrite(p: String, content: String): Unit = {
     val target = Paths.get(p)
     Files.createDirectories(target.getParent)
     val tmp = Paths.get(p + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
-    Files.write(tmp, sb.toString.getBytes(StandardCharsets.UTF_8))
+    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
+    ()
   }
 
-  private def load(p: String): Option[Codebooks] = {
+  private[queries] def load(p: String): Option[Codebooks] = {
     if (!new File(p).exists()) return None
     try {
       val lines = Files.readAllLines(Paths.get(p)).toArray(Array.empty[String])

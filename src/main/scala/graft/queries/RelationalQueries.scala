@@ -1133,6 +1133,9 @@ object RelationalQueries extends QueryModule {
     "q_agg_approx_distinct" -> "HLL estimate; q_sketch_error and RelationalQueriesSpec bound it",
     "q_quantiles_approx" -> "t-digest estimate; RelationalQueriesSpec holds it near q_quantiles")
 
+  override val buildJobs: Map[String, String] = Map(
+    "q_quantiles_sel" -> "order statistics are selected from a sorted RDD on the driver")
+
   val oracles: Map[String, String] = Map(
     "q_histogram" ->
       """SELECT CAST(floor(o_totalprice / 50000) AS INTEGER) AS bin,

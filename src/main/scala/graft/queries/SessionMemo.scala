@@ -4,6 +4,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
+import graft.Tables
+
 /** Session-lifetime memo for SHARED derived relations.
   *
   * Several operator families derive the same intermediate — the
@@ -14,9 +16,9 @@ import org.apache.spark.storage.StorageLevel
   * per query is wasted work in a session and an anti-pattern at
   * 100 TB, where the same decision is landing the derived relation as
   * a TABLE once and pointing every job at it. Entries here are
-  * persisted MEMORY_AND_DISK once per (builder, session, dir) and
-  * deliberately NOT registered with [[CacheRegistry]] (whose per-query
-  * drains would defeat the sharing).
+  * persisted MEMORY_AND_DISK once per (builder, session, dir, data
+  * version) and deliberately NOT registered with [[CacheRegistry]]
+  * (whose per-query drains would defeat the sharing).
   *
   * Lifecycle (the eviction contract the bare ConcurrentHashMaps this
   * replaces did not have):
@@ -24,21 +26,19 @@ import org.apache.spark.storage.StorageLevel
   *    context listener and defensively on every lookup, so a stopped
   *    session's map entries cannot pin the session object;
   *  - [[drain]] unpersists and forgets everything — the harness and
-  *    test `afterAll` hooks can call it like `CacheRegistry.drain()`.
-  *
-  * Staleness contract: keys are (builder, session, dir) and the test
-  * dirs are immutable, so reuse can only skip recomputation, never
-  * change a result. If a caller REWRITES a dir's files mid-session the
-  * memo would serve the pre-rewrite relation — call [[drain]] (or
-  * [[invalidate]] with the dir) after any such rewrite.
+  *    test `afterAll` hooks can call it like `CacheRegistry.drain()`;
+  *  - the data version is the [[Tables.version]] of every table in
+  *    `dir`, so a table rewritten mid-session gets a fresh entry, and
+  *    the entry built on the old files is released then.
   */
 object SessionMemo {
   private val live = new java.util.concurrent.ConcurrentHashMap[
-    (String, SparkSession, String), DataFrame]()
+    (String, SparkSession, String, String), DataFrame]()
   private val hooked = java.util.concurrent.ConcurrentHashMap
     .newKeySet[SparkSession]()
 
-  /** Memoize `build` under (key, session, dir); persists on first use.
+  /** Memoize `build` under (key, session, dir, the data version of
+    * `dir`'s tables); persists on first use.
     * get-then-putIfAbsent rather than computeIfAbsent: builders NEST
     * (purchaseEdges derives from the memoized custSuppPairs), and
     * ConcurrentHashMap forbids a mapping function touching other keys
@@ -49,30 +49,32 @@ object SessionMemo {
       (build: => DataFrame): DataFrame = {
     evictStopped()
     hook(s)
-    val k = (key, s, d)
+    val k = (key, s, d, Tables.digest(Tables.names.map(Tables.version(s, d, _)).mkString(" ")))
     val existing = live.get(k)
     if (existing != null) existing
     else {
+      // released first: Spark's cache manager matches a plan over the
+      // same paths, so a persist over the old files would serve the new
+      // build its rows
+      dropWhere(e => e._1 == key && (e._2 eq s) && e._3 == d && e._4 != k._4)
       val built = build.persist(StorageLevel.MEMORY_AND_DISK)
       val prev = live.putIfAbsent(k, built)
       if (prev != null) { release(built); prev } else built
     }
   }
 
-  /** Drop (and unpersist) every entry for a data directory — for
-    * callers that rewrite a dir's files mid-session. */
-  def invalidate(d: String): Unit = {
+  /** Drop (and unpersist) every entry for a data directory. */
+  def invalidate(d: String): Unit = dropWhere(_._3 == d)
+
+  /** Unpersist every memoized relation and clear the map. */
+  def drain(): Unit = dropWhere(_ => true)
+
+  private def dropWhere(p: ((String, SparkSession, String, String)) => Boolean): Unit = {
     val it = live.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
-      if (e.getKey._3 == d) { release(e.getValue); it.remove() }
+      if (p(e.getKey)) { release(e.getValue); it.remove() }
     }
-  }
-
-  /** Unpersist every memoized relation and clear the map. */
-  def drain(): Unit = {
-    val it = live.entrySet().iterator()
-    while (it.hasNext) { release(it.next().getValue); it.remove() }
   }
 
   private def release(df: DataFrame): Unit =

@@ -1,6 +1,5 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
 import graft.Tables
 
 /** SQL-text entry point (SURVEY.md §3.3): the reference drives SQLite /

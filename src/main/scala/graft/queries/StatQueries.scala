@@ -68,33 +68,30 @@ object StatQueries extends QueryModule {
   private val ransacLine: Q = (s, d) => {
     // the day index (OrdersDaily.indexed) rides the bounded ~2.4k-row
     // calendar grid (the q_ses_forecast/q_holt_winters window class,
-    // allow-listed); n/Σv are two bounded driver scalars off the same
-    // cached grid
-    val grid = CacheRegistry.register(OrdersDaily.indexed(s, d)
-      .select(col("rk").as("t"), col("v")).persist())
-    val head = grid.agg(count(lit(1)).as("n"), sum("v").as("sv")).head()
-    val n = head.getLong(0)
-    val sv = head.getLong(1)
-    val thr = sv / (10L * n)
+    // allow-listed); n and the inlier band thr = Σv DIV (10·n) are one
+    // scalar subquery over the same grid
+    val grid = OrdersDaily.indexed(s, d).select(col("rk").as("t"), col("v"))
+    val nThr = grid.agg(count(lit(1)).as("n"), sum("v").as("sv"))
+      .select(struct(col("n"), expr("sv DIV (10 * n)").as("thr"))).scalar()
     def h(salt: String) = conv(substring(md5(
       concat(lit("ransac:"), col("k").cast("string"), lit(salt))), 1, 8),
       16, 10).cast("long")
-    val cands = grid.sparkSession.range(1).toDF("z")
-      .select(explode(expr("sequence(1L, 24L)")).as("k"))
-      .select(col("k"),
-        (lit(1L) + pmod(h(":a"), lit(n))).as("i1"),
-        (lit(1L) + pmod(h(":b"), lit(n))).as("i2raw"))
-      .select(col("k"), col("i1"),
+    val cands = s.range(1).toDF("z")
+      .select(explode(expr("sequence(1L, 24L)")).as("k"), nThr.as("nt"))
+      .select(col("k"), col("nt.n").as("n"), col("nt.thr").as("thr"),
+        (lit(1L) + pmod(h(":a"), col("nt.n"))).as("i1"),
+        (lit(1L) + pmod(h(":b"), col("nt.n"))).as("i2raw"))
+      .select(col("k"), col("n"), col("thr"), col("i1"),
         when(col("i2raw") === col("i1"),
-          pmod(col("i2raw"), lit(n)) + 1).otherwise(col("i2raw")).as("i2"))
+          pmod(col("i2raw"), col("n")) + 1).otherwise(col("i2raw")).as("i2"))
     val withPts = cands
       .join(grid.select(col("t").as("i1"), col("v").as("v1")), Seq("i1"))
       .join(grid.select(col("t").as("i2"), col("v").as("v2")), Seq("i2"))
     val inlier = abs((col("v") - col("v1")).cast(dec) * (col("i2") - col("i1"))
         - (col("v2") - col("v1")).cast(dec) * (col("t") - col("i1"))) <=
-      abs(lit(thr).cast(dec) * (col("i2") - col("i1")))
+      abs(col("thr").cast(dec) * (col("i2") - col("i1")))
     val best = grid.crossJoin(broadcast(withPts))
-      .groupBy("k", "i1", "i2", "v1", "v2")
+      .groupBy("k", "i1", "i2", "v1", "v2", "n", "thr")
       .agg(sum(when(inlier, 1L).otherwise(0L)).as("n_in"))
       .orderBy(desc("n_in"), asc("k"))
       .limit(1)
@@ -104,7 +101,7 @@ object StatQueries extends QueryModule {
         sum(col("t").cast(dec)).as("st"), sum(col("v").cast(dec)).as("sy"),
         sum(col("t").cast(dec) * col("t")).as("stt"),
         sum(col("t").cast(dec) * col("v")).as("sty"),
-        max("k").as("best_k"))
+        max("k").as("best_k"), max("n").as("n"))
       // b rounded FIRST, a derived from the ROUNDED b (the
       // q_quantile_reg boundary-rounding discipline, so the oracle
       // replays the identical two-step derivation)
@@ -123,7 +120,7 @@ object StatQueries extends QueryModule {
         floor((col("sy").cast("double") - col("b6") * col("st").cast("double"))
           / col("ni").cast("double") * lit(1000000.0) + lit(0.5))
           / lit(1000000.0))
-      .select(lit(n).as("n_days"), col("best_k"), col("ni").as("n_inliers"),
+      .select(col("n").as("n_days"), col("best_k"), col("ni").as("n_inliers"),
         (floor(col("a6") / 100.0 * lit(10000.0) + lit(0.5)) / lit(10000.0))
           .as("a_usd"),
         (floor(col("b6") / 100.0 * lit(10000.0) + lit(0.5)) / lit(10000.0))
@@ -2333,9 +2330,10 @@ object StatQueries extends QueryModule {
     * every RSS/F expression is a mirrored double. Asymptotic
     * F(2, ∞) 5% critical 3.0. */
   private val chow: Q = (s, d) => {
-    val half = dailyCents(s, d).count() / 2
-    val t = OrdersDaily.indexed(s, d).select(col("rk").as("x"),
-      col("v").as("y"), (col("rk") <= half).as("s1"))
+    val half = dailyCents(s, d).agg(count(lit(1)).as("n"))
+      .select(expr("n DIV 2")).scalar()
+    val t = OrdersDaily.indexed(s, d).withColumn("half", half)
+      .select(col("rk").as("x"), col("v").as("y"), (col("rk") <= col("half")).as("s1"))
     def seg(flag: Column, c: Column) = sum(when(flag, c).otherwise(lit(0L).cast(dec)))
     val a = t.agg(
       count(lit(1)).as("n"),
@@ -2557,6 +2555,9 @@ object StatQueries extends QueryModule {
     "q_cramers_v" -> cramersV,
     "q_fd_check" -> fdCheck,
   )
+
+  override val buildJobs: Map[String, String] = Map(
+    "q_quantile_reg" -> "iteratively reweighted least squares refits its line on the driver each round")
 
   val oracles: Map[String, String] = Map(
     // same-month pair join, exact integer S, per-season tie-corrected

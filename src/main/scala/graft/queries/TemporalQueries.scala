@@ -946,11 +946,14 @@ object TemporalQueries extends QueryModule {
     * bounded day grid. */
   private val runsTest: Q = (s, d) => {
     val daily = OrdersDaily.cents(s, d)
-    val n = daily.count()
-    val (k1, k2) = ((n + 1) / 2, n / 2 + 1)
+    // the two middle ranks k1 = (n + 1) DIV 2 and k2 = n DIV 2 + 1
+    val ks = daily.agg(count(lit(1)).as("n"))
+      .select(struct(expr("(n + 1) DIV 2").as("k1"), expr("n DIV 2 + 1").as("k2")))
+      .scalar()
     val med = daily
       .withColumn("rk", row_number().over(Window.orderBy("v", "day")))
-      .filter(col("rk") === k1 || col("rk") === k2)
+      .withColumn("ks", ks)
+      .filter(col("rk") === col("ks.k1") || col("rk") === col("ks.k2"))
       .agg(((min("v") + max("v")) / lit(2.0)).as("med"))
     val signs = daily.crossJoin(broadcast(med))
       .filter(col("v") =!= col("med"))
@@ -994,10 +997,10 @@ object TemporalQueries extends QueryModule {
     val sg = sqrt((col("n").cast(dec) * col("svv") -
       col("sv") * col("sv")).cast("double") /
       (col("n").cast("double") * (col("n") - 1)))
-    val n = daily.count()
     val z = (col("segv").cast("double") / col("n_days") - mu) / sg
     OrdersDaily.indexed(s, d)
-      .withColumn("seg", expr(s"((rk - 1) * 100) DIV ${n}L") + 1)
+      .withColumn("n", tot.select("n").scalar())
+      .withColumn("seg", expr("((rk - 1) * 100) DIV n") + 1)
       .groupBy("seg")
       .agg(count(lit(1)).as("n_days"), sum("v").as("segv"))
       .crossJoin(broadcast(tot))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables
+import graft.plans.TableStats
 import graft.functions.Fingerprint64.fingerprint64
 import graft.functions.JaroWinkler.jaroWinkler
 
@@ -591,7 +592,7 @@ object TextQueries extends QueryModule {
     // allocation per position, and the exploded relation shuffles an
     // 8-byte long instead of a 32-char digest string (guide §2.3).
     // `h` is internal (equality-only); the emitted extents are
-    // unchanged — parity with the literal original ([[dedupSubstrHof]])
+    // unchanged — parity with the literal original md5-string chain
     // is pinned by TokenWindowsSpec and the DuckDB oracle at both SFs.
     val wins = Tables.documents(s, d)
       .select(col("doc_id"),
@@ -602,28 +603,11 @@ object TextQueries extends QueryModule {
     substrExtents(wins, w)
   }
 
-  /** The literal pre-round-18 q_dedup_substr window relation —
-    * md5-string hashes from the interpreted slice/concat chain — kept
-    * in-tree as the parity anchor TokenWindowsSpec pins the compiled
-    * form against (the docWinnowMd5Hof precedent). */
-  private[graft] def dedupSubstrHof(w: Int): Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), split(col("text"), " ").as("ws"))
-      .filter(size(col("ws")) >= w)
-    val wins = docs
-      .select(col("doc_id"), size(col("ws")).cast("long").as("nw"),
-        col("ws"),
-        expr(s"explode(sequence(1, size(ws) - ${w - 1}))").as("p"))
-      .select(col("doc_id"), col("nw"), col("p"),
-        md5(concat_ws(" ", slice(col("ws"), col("p"), lit(w)))).as("h"))
-    substrExtents(wins, w)
-  }
-
   /** Shared downstream of both window relations: repeated-window
     * detection, the gaps-and-islands merge, and the per-doc extent
     * roll-up. `wins` carries (doc_id, nw, p, h); `h`'s type is
     * whatever the hash lane produced — equality is all that is used. */
-  private def substrExtents(wins: DataFrame, w: Int): DataFrame = {
+  private[graft] def substrExtents(wins: DataFrame, w: Int): DataFrame = {
     val dup = wins.groupBy("h")
       .agg(countDistinct("doc_id").as("nd"))
       .filter(col("nd") > 1).select("h")
@@ -1460,9 +1444,8 @@ object TextQueries extends QueryModule {
     * detection. Near-dup docs share most fingerprints (unit-tested),
     * and the selected set is position-robust unlike head-sampling.
     * Computed by the native [[graft.functions.WinnowStats]] codegen
-    * expression (one compiled pass per row); [[docWinnowHof]] keeps
-    * the original higher-order-function formulation as the semantic
-    * ground truth WinnowSpec pins the expression against. Rows-only
+    * expression (one compiled pass per row); WinnowSpec pins it
+    * against the original higher-order-function formulation. Rows-only
     * driver check (hash family not reproducible in DuckDB). */
   private val docWinnow: Q = (s, d) =>
     Tables.documents(s, d)
@@ -1496,8 +1479,8 @@ object TextQueries extends QueryModule {
     * plus a substring + hex-string + decimal-parse allocation per
     * character position (guide §4: eliminate non-codegen expressions
     * on the hot path). Bit-identical by construction (Md5TextSpec pins
-    * it against [[docWinnowMd5Hof]], the original formulation, and the
-    * DuckDB oracle hash is unchanged). */
+    * it against the original formulation, and the DuckDB oracle hash
+    * is unchanged). */
   private val docWinnowOracle: Q = (s, d) =>
     Tables.documents(s, d)
       .filter(pmod(col("doc_id"), lit(4)) === 0)
@@ -1506,54 +1489,6 @@ object TextQueries extends QueryModule {
         col("doc_id"),
         col("ws.n_fingerprints").as("n_fingerprints"),
         col("ws.fp_xor").as("fp_xor"))
-      .orderBy("doc_id")
-
-  /** The original interpreted md5-HOF chain of [[docWinnowOracle]] —
-    * kept (out of `queries`) as the semantic ground truth Md5TextSpec
-    * pins the compiled expression against, the [[docWinnowHof]]
-    * precedent. */
-  private[graft] def docWinnowMd5Hof(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .filter(pmod(col("doc_id"), lit(4)) === 0)
-      .withColumn("grams", expr(
-        """CASE WHEN length(text) >= 8
-             THEN transform(sequence(1, length(text) - 7),
-                  i -> CAST(conv(substring(md5(substring(text, i, 8)), 1, 8), 16, 10) AS LONG))
-             ELSE array(CAST(conv(substring(md5(text), 1, 8), 16, 10) AS LONG)) END"""))
-      .withColumn("fingerprints", expr(
-        """array_distinct(CASE WHEN size(grams) >= 4
-             THEN transform(sequence(0, size(grams) - 4),
-                  j -> least(grams[j], grams[j+1], grams[j+2], grams[j+3]))
-             ELSE array(array_min(grams)) END)"""))
-      .select(
-        col("doc_id"),
-        size(col("fingerprints")).as("n_fingerprints"),
-        expr("aggregate(fingerprints, 0L, (a, f) -> a ^ f)").as("fp_xor"))
-      .orderBy("doc_id")
-
-  /** The original HOF chain — interpreted per array element, so ~2
-    * Catalyst tree evaluations + a substring allocation per character;
-    * kept (out of `queries`) as the reference implementation the
-    * codegen expression is tested against. */
-  private[graft] def docWinnowHof(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .withColumn("grams", expr(
-        """CASE WHEN length(text) >= 8
-             THEN transform(sequence(1, length(text) - 7),
-                            i -> xxhash64(substring(text, i, 8)))
-             ELSE array(xxhash64(text)) END"""))
-      .withColumn("fingerprints", expr(
-        // direct 4-way least() instead of array_min(slice(...)): slice
-        // allocates a fresh array per character position, which at
-        // corpus scale is the dominant GC cost of the whole query
-        """array_distinct(CASE WHEN size(grams) >= 4
-             THEN transform(sequence(0, size(grams) - 4),
-                            j -> least(grams[j], grams[j+1], grams[j+2], grams[j+3]))
-             ELSE array(array_min(grams)) END)"""))
-      .select(
-        col("doc_id"),
-        size(col("fingerprints")).as("n_fingerprints"),
-        expr("aggregate(fingerprints, 0L, (a, f) -> a ^ f)").as("fp_xor"))
       .orderBy("doc_id")
 
   /** PII patterns shared by the detection counts and the redaction
@@ -1671,10 +1606,10 @@ object TextQueries extends QueryModule {
       hotKeyThreshold: Long = defaultHotKeyThreshold): DataFrame = {
     val docs = Tables.documents(s, d)
     // hottest-key scalar from the stats store (one scan per JVM per
-    // (dir, key), not one probe job per execution — at 100 TB this is a
+    // table version and key, not one probe job per execution — at 100 TB this is a
     // catalog-statistics lookup)
-    val (_, hottest) = graft.plans.TableStats
-      .keyCountStats(s"$d/documents#source", docs, "source")
+    val (_, hottest) = TableStats
+      .keyCountStats(TableStats.key(s, d, "documents", "source"), docs, "source")
     rankedHeadByKey(docs, "source", cap, hottest, hotKeyThreshold)
       .select(col("doc_id"), col("source"), col("rn"))
       .orderBy("doc_id")
@@ -1715,8 +1650,8 @@ object TextQueries extends QueryModule {
     val docs = Tables.documents(s, d)
     // cap (= smallest language) and the skew probe come from the same
     // stats-store entry — no per-execution probe job
-    val (minN, hottest) = graft.plans.TableStats
-      .keyCountStats(s"$d/documents#lang", docs, "lang")
+    val (minN, hottest) = TableStats
+      .keyCountStats(TableStats.key(s, d, "documents", "lang"), docs, "lang")
     val cap = minN.toInt
     rankedHeadByKey(docs, "lang", cap, hottest, hotKeyThreshold)
       .select(col("doc_id"), col("lang"), col("rn"))
@@ -1750,15 +1685,15 @@ object TextQueries extends QueryModule {
   /** Decontamination through an explicit Bloom-filter semi-join — the
     * form [[decontaminate]] takes at 100 TB: the eval shingle set
     * builds a Bloom filter (a few hundred KB for millions of shingles
-    * — a plan literal, vs broadcasting the full set), the corpus side
+    * — a scalar subquery, vs broadcasting the full set), the corpus side
     * prunes non-matching shingles AT SCAN SPEED, and only the
     * survivors (true matches + the fpp tail) reach the exact join that
     * computes contamination strength. Bloom filters have no false
     * negatives and the exact join kills false positives, so the output
     * is bit-identical to [[decontaminate]] — it shares that query's
     * oracle verbatim. The filter is sized from the eval distinct-count
-    * (one O(1) scalar to the driver; a production pass reads it from
-    * table stats). */
+    * (memoized in [[graft.plans.TableStats]] per data version; a
+    * production pass reads it from table stats). */
   private val decontaminateBloom: Q = (s, d) => {
     val sh = shingleRows(s, d)
     val evalSh = sh.filter(pmod(col("doc_id"), lit(5)) === 4)
@@ -1768,11 +1703,13 @@ object TextQueries extends QueryModule {
     // production engine, not a per-execution count() job — and it is
     // sizing-only (capacity moves fpp, the exact join kills every
     // false positive, output bit-identical)
-    val nEval = math.max(1L, graft.plans.TableStats
-      .scalarLong(s"$d/documents#evalShingles")(evalSh.count()))
+    val nEval = math.max(1L,
+      TableStats.scalarLong(TableStats.key(s, d, "documents", "evalShingles"))(evalSh.count()))
+    // the filter is a scalar subquery over the Bloom aggregate, the
+    // shape of Spark's own runtime filter: built when the plan runs
     val bloom = evalSh
-      .agg(graft.functions.BloomFilters.bloomAgg(col("shingle"), nEval).as("bf"))
-      .head().getAs[Array[Byte]](0)
+      .agg(graft.functions.BloomFilters.bloomAgg(col("shingle"), nEval))
+      .scalar()
     sh.filter(pmod(col("doc_id"), lit(5)) =!= 4)
       .filter(graft.functions.BloomFilters.mightContain(bloom, col("shingle")))
       .join(evalSh, "shingle")
@@ -1884,6 +1821,11 @@ object TextQueries extends QueryModule {
     "q_compression_ratio" -> "DuckDB has no deflate; q_compression_ratio_pin checks the codec",
     "q_doc_fingerprint" -> "DuckDB has no fingerprint64; TextSimilaritySpec pins the Scala hash",
     "q_doc_winnow" -> "hash not replayable in DuckDB; md5 twin q_doc_winnow_oracle is hash-gated")
+
+  override val buildJobs: Map[String, String] = Map(
+    "q_dedup_cluster" -> "min-label propagation checks its fixpoint on the driver each round",
+    "q_dedup_cluster_ls" -> "large-star/small-star rounds check their fixpoint on the driver",
+    "q_corpus_pipeline" -> "the canonical-copy stage is a lineage cut (Checkpoints.cut)")
 
   val oracles: Map[String, String] = Map(
     "q_compression_ratio_pin" ->

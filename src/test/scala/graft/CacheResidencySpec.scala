@@ -15,7 +15,11 @@ import graft.queries.CacheRegistry
   * used to collect per-partition offsets at build time from a cached
   * range repartition; once that cache was dropped, the re-sampled
   * range bounds moved rows between partitions and the offsets landed
-  * on the wrong rows. */
+  * on the wrong rows. The last group reads its scalars (a count, a
+  * threshold, a Bloom filter, the query's IVF cells) inside the plan,
+  * some from a registered persist: q_pagerank's node count reads its
+  * cached degree table. q_chow, q_runs_test and q_sax read theirs the
+  * same way and are in the first group. */
 class CacheResidencySpec extends SparkSpec {
 
   private val dayGridQueries = Seq(
@@ -32,6 +36,11 @@ class CacheResidencySpec extends SparkSpec {
     "q_wilcoxon", "q_ks_test", "q_sprt", "q_bootstrap_ci", "q_zipf_slope",
     "q_heaps_law", "q_vocab_build", "q_win_rank_salted")
 
+  private val inPlanScalarQueries = Seq(
+    "q_ransac_line", "q_pagerank", "q_pagerank_personalized",
+    "q_decontaminate_bloom", "q_corpus_scan_pruned", "q_knn_ivf",
+    "q_knn_ivf_recall")
+
   // Spark's range sampler seeds from the RDD id, which a recompute
   // changes; at sf0.001 every partition is smaller than its sample and
   // is taken whole, so the bounds could not move there. sf0.01 is the
@@ -42,7 +51,7 @@ class CacheResidencySpec extends SparkSpec {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq
 
-  (dayGridQueries ++ rankQueries).foreach { name =>
+  (dayGridQueries ++ rankQueries ++ inPlanScalarQueries).foreach { name =>
     test(s"$name gives the same rows when its caches are dropped before the run") {
       val q = SparkEntry.queries(name)
       val direct = rows(q(spark, dir))

@@ -14,7 +14,7 @@ class Md5TextSpec extends SparkSpec {
 
   test("md5 winnow expression matches the HOF ground truth on the corpus") {
     val fast = TextQueries.queries("q_doc_winnow_oracle")(spark, sf).collect()
-    val slow = TextQueries.docWinnowMd5Hof(spark, sf).collect()
+    val slow = ReferenceForms.docWinnowMd5Hof(spark, sf).collect()
     assert(fast.length == slow.length && fast.nonEmpty)
     fast.zip(slow).foreach { case (f, h) =>
       assert(f.getLong(0) == h.getLong(0))
@@ -66,7 +66,7 @@ class Md5TextSpec extends SparkSpec {
   test("simhash64 expression matches the grouped xxhash64 formulation") {
     val fast = SimilarityQueries.simhashSignatures(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val slow = SimilarityQueries.simhashSignaturesGrouped(spark, sf)
+    val slow = ReferenceForms.simhashSignaturesGrouped(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fast.nonEmpty)
     assert(fast == slow, s"signature drift on docs ${(fast.keySet ++ slow.keySet)
@@ -77,7 +77,7 @@ class Md5TextSpec extends SparkSpec {
     val fast = Tables.documents(spark, sf)
       .select(col("doc_id"), Md5Text.simhashMd5_32(col("text")).as("simhash"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val slow = SimilarityQueries.simhashMd5SignaturesGrouped(spark, sf)
+    val slow = ReferenceForms.simhashMd5SignaturesGrouped(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fast.nonEmpty)
     assert(fast == slow, s"signature drift on docs ${(fast.keySet ++ slow.keySet)

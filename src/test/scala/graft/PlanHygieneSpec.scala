@@ -13,12 +13,12 @@ class PlanHygieneSpec extends SparkSpec {
   // or q_tfidf's 1-row corpus-size aggregate)
   // each allowed BNLJ is a reviewed broadcast of a tiny side: the 1-row
   // query vector (knn family), the 1-row corpus size (tfidf/funnel),
-  // the 16 centroid rows (knn_batch_ivf), the 1-row grid bounds
+  // the 1-row grid bounds
   // (resample_fill), the 1-row token/lang-count totals (lm_score,
   // source_divergence, temperature_sample), or a genuine range/cross join
   private val bnlAllowed = Set(
     "q_join_range", "q_join_cross", "q_knn_exact", "q_knn_lsh",
-    "q_knn_lsh_multi", "q_knn_ivf", "q_knn_ivf_pq", "q_knn_batch_ivf",
+    "q_knn_lsh_multi", "q_knn_ivf", "q_knn_ivf_pq",
     "q_tfidf", "q_funnel", "q_resample_fill",
     "q_lm_score", "q_source_divergence", "q_temperature_sample",
     // round 8: 1-row broadcast corpus stats (N+avgdl / n_docs)
@@ -237,6 +237,39 @@ class PlanHygieneSpec extends SparkSpec {
     }
   }
 
+  test("a builder starts a Spark job only where its module declares why") {
+    // the surface build above warmed the table footers, memos, indexes
+    // and layouts; what a rebuild starts is the builder's own work
+    surface
+    graft.queries.CacheRegistry.drain()
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .filter(_.startsWith("build:"))
+          .foreach(g => jobs.merge(g.stripPrefix("build:"), 1, _ + _))
+    }
+    val sc = spark.sparkContext
+    val names = SparkEntry.queries.keys.toSeq.sorted
+    val counts = try {
+      sc.addSparkListener(listener)
+      names.foreach { name =>
+        sc.setJobGroup(s"build:$name", name)
+        try SparkEntry.queries(name)(spark, sf) finally sc.clearJobGroup()
+        graft.queries.CacheRegistry.drain()
+      }
+      // one job after the builds, so every earlier job start has
+      // reached the listener
+      jobsDuring(())
+      names.map(n => n -> jobs.getOrDefault(n, 0)).toMap
+    } finally sc.removeSparkListener(listener)
+    val declared = SparkEntry.buildJobs.keySet
+    val undeclared = counts.filter { case (n, j) => j > 0 && !declared(n) }
+    assert(undeclared.isEmpty, s"builders that start Spark jobs without a buildJobs reason: $undeclared")
+    val stale = declared.filter(counts(_) == 0)
+    assert(stale.isEmpty, s"buildJobs entries whose builder starts no Spark job: $stale")
+  }
+
   test("new operators prune their parquet scans to referenced columns") {
     val hist = SparkEntry.queries("q_histogram")(spark, sf)
       .queryExecution.executedPlan.toString
@@ -321,7 +354,7 @@ class PlanHygieneSpec extends SparkSpec {
       // languages, a genuine grid, not a data-sized dimension
       "q_corpus_pipeline" -> Set("globalwindow"),
       "q_knn_batch" -> Set.empty,
-      "q_knn_batch_ivf" -> Set("bnl"), // reviewed 16-row centroid broadcast
+      "q_knn_batch_ivf" -> Set.empty,
       "q_dedup_embedding_lsh_multi" -> Set.empty)
     checks.foreach { case (name, allow) =>
       val fs = PlanAudit.finalFindings(SparkEntry.queries(name)(spark, sf), allow)

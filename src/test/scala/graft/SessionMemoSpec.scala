@@ -4,8 +4,9 @@ import graft.queries.SessionMemo
 import org.apache.spark.sql.functions._
 
 /** Lifecycle contract of the shared-builder memo: build-once reuse,
-  * dir-scoped invalidation, and full drain (the eviction surface the
-  * bare ConcurrentHashMaps it replaced did not have). */
+  * dir-scoped invalidation, full drain (the eviction surface the bare
+  * ConcurrentHashMaps it replaced did not have), and a fresh entry when
+  * a table under the dir is rewritten. */
 class SessionMemoSpec extends SparkSpec {
 
   test("memo builds once per (key, session, dir) and reuses the frame") {
@@ -47,5 +48,24 @@ class SessionMemoSpec extends SparkSpec {
     val cached = get("dirB")
     assert(cached.storageLevel.useMemory || cached.storageLevel.useDisk,
       "memoized frames must be persisted")
+  }
+
+  test("a table rewritten mid-session is read again") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-memo-rewrite")
+    val table = dir.resolve("region.parquet")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf, "region.parquet"), table)
+    def regions() = SessionMemo("spec.rewrite", spark, dir.toString) {
+      Tables.region(spark, dir.toString)
+    }
+    val before = regions()
+    assert(before.count() == 5)
+    // rewrite the table in place with two of its rows
+    val staging = dir.resolve("staging")
+    Tables.region(spark, sf).filter(col("r_regionkey") < 2)
+      .coalesce(1).write.parquet(staging.toString)
+    java.nio.file.Files.delete(table)
+    java.nio.file.Files.move(staging, table)
+    assert(regions().count() == 2, "the memo served the rows of the old files")
+    SessionMemo.invalidate(dir.toString)
   }
 }

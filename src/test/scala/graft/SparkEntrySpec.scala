@@ -54,4 +54,22 @@ class SparkEntrySpec extends AnyFunSuite {
     rejects(module(Seq("q_a", "q_b"), Seq("q_a"), Nil))("neither an oracle nor a no-oracle reason: q_b")
     rejects(module(Seq("q_a"), Seq("q_a"), Seq("q_a")))("both an oracle and a no-oracle reason: q_a")
   }
+
+  test("building the catalog keeps build-job and untimed facts and rejects an orphan one") {
+    def withFacts(jobs: Seq[String], skip: Seq[String]): QueryModule = new QueryModule {
+      private val build: Q = (_, _) => null
+      val queries: Map[String, Q] = Map("q_a" -> build)
+      val oracles: Map[String, String] = Map("q_a" -> "SELECT 1")
+      override val buildJobs: Map[String, String] = jobs.map(_ -> "driver loop").toMap
+      override val untimed: Map[String, String] = skip.map(_ -> "demo").toMap
+    }
+    val ok = QueryModule.catalog(Seq(withFacts(Seq("q_a"), Seq("q_a"))))
+    assert(ok.buildJobs == Map("q_a" -> "driver loop") && ok.untimed == Map("q_a" -> "demo"))
+    val job = intercept[IllegalArgumentException](
+      QueryModule.catalog(Seq(withFacts(Seq("q_x"), Nil))))
+    assert(job.getMessage.contains("build-job entry names no query: q_x"), job.getMessage)
+    val skip = intercept[IllegalArgumentException](
+      QueryModule.catalog(Seq(withFacts(Nil, Seq("q_x")))))
+    assert(skip.getMessage.contains("untimed entry names no query: q_x"), skip.getMessage)
+  }
 }

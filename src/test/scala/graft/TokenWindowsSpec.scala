@@ -14,7 +14,7 @@ class TokenWindowsSpec extends SparkSpec {
 
   test("q_dedup_substr matches the interpreted md5 formulation on the corpus") {
     val fast = TextQueries.queries("q_dedup_substr")(spark, sf).collect()
-    val slow = TextQueries.dedupSubstrHof(16)(spark, sf).collect()
+    val slow = ReferenceForms.dedupSubstrHof(16)(spark, sf).collect()
     assert(fast.length == slow.length && fast.nonEmpty)
     fast.zip(slow).foreach { case (f, h) =>
       assert(f == h, s"extent row mismatch: $f vs $h")

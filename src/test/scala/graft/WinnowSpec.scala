@@ -10,7 +10,7 @@ class WinnowSpec extends SparkSpec {
 
   test("winnow expression matches the HOF ground truth on the corpus") {
     val fast = TextQueries.queries("q_doc_winnow")(spark, sf).collect()
-    val slow = TextQueries.docWinnowHof(spark, sf).collect()
+    val slow = ReferenceForms.docWinnowHof(spark, sf).collect()
     assert(fast.length == slow.length)
     fast.zip(slow).foreach { case (f, h) =>
       assert(f.getLong(0) == h.getLong(0))
