@@ -36,20 +36,25 @@ object GraphQueries extends QueryModule {
   private val Damping = 0.85
   private val Iterations = 3
 
-  /** Memoized symmetric purchase-graph edge list — the derived graph
-    * FOUR operators build identically (pagerank, degree profile,
-    * k-hop BFS, label propagation). Memoized + persisted for the
-    * session (the [[TextQueries.ngramPairsShared]] precedent): with
-    * only per-query CacheRegistry drains each operator would re-run
-    * the same orders⋈lineitem distinct; at 100 TB the equivalent
-    * decision is landing the derived graph as a table ONCE and
-    * pointing every graph job at it. One bounded edge-list-sized
-    * entry per (session, dir) — deliberately NOT registered with
-    * CacheRegistry, exactly like the memoized shingle tables. */
+  /** Memoized symmetric purchase-graph edge list — the one persisted
+    * graph relation, shared by every purchase-graph operator (pagerank,
+    * degree profile, k-hop BFS, label propagation directly; k-core,
+    * link prediction, modularity and HITS through [[custSuppPairs]]).
+    * Memoized + persisted for the session (the
+    * [[TextQueries.ngramPairsShared]] precedent): with only per-query
+    * CacheRegistry drains each operator would re-run the same
+    * orders⋈lineitem distinct; at 100 TB the equivalent decision is
+    * landing the derived graph as a table ONCE and pointing every graph
+    * job at it. One bounded edge-list-sized entry per (session, dir) —
+    * deliberately NOT registered with CacheRegistry, exactly like the
+    * memoized shingle tables. */
   private def purchaseEdges(s: SparkSession, d: String): DataFrame =
     SessionMemo("graph.purchaseEdges", s, d) {
-      val pairs = custSuppPairs(s, d)
-        .select(col("cust").as("src"), (-col("supp") - 1).as("dst"))
+      val pairs = Tables.orders(s, d)
+        .join(Tables.lineitem(s, d),
+          col("o_orderkey") === col("l_orderkey"))
+        .select(col("o_custkey").as("src"), (-col("l_suppkey") - 1).as("dst"))
+        .distinct()
       pairs.unionByName(
         pairs.select(col("dst").as("src"), col("src").as("dst")))
         // landed partitioned by src (round 17): every consumer keys on
@@ -63,33 +68,22 @@ object GraphQueries extends QueryModule {
         .repartition(col("src"))
     }
 
-  /** Memoized distinct (customer, supplier) purchase pair relation —
-    * the bipartite base FIVE operators derive from (k-core,
-    * link prediction, modularity, HITS, and [[purchaseEdges]]'s
-    * symmetrization). Same session-memo contract as purchaseEdges. */
+  /** The distinct (customer, supplier) purchase pairs — the bipartite
+    * base of k-core, link prediction, modularity and HITS — as a view of
+    * [[purchaseEdges]], not a second persist: customer keys are ≥ 0 and
+    * every mirrored src (−suppkey − 1) is < 0, so the customer-side
+    * half is exactly the pair list. The view keeps the memo's
+    * hash(src) partitioning as hash(cust), which the heavy consumers
+    * key on — link prediction's and modularity's pair self-joins, their
+    * degree/cap groupBys, k-core's customer-side peel — so neither
+    * self-join exchanges. */
   private def custSuppPairs(s: SparkSession, d: String): DataFrame =
-    SessionMemo("graph.custSuppPairs", s, d) {
-      Tables.orders(s, d)
-        .join(Tables.lineitem(s, d),
-          col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-        .distinct()
-        // landed partitioned by cust (round 17): the heavy consumers
-        // all key on cust — link prediction's and modularity's pair
-        // self-joins, their degree/cap groupBys, k-core's customer-
-        // side peel — and distinct()'s hash(cust, supp) partitioning
-        // satisfied none of them. Cost-neutral at sf0.1 (A/B below
-        // noise: the ≤10 MB cached relation broadcast-joins anyway);
-        // at 100 TB this is the landed table's hash distribution
-        // choice (guide §2.4), and with cached-plan partitioning
-        // exposed it removes both self-join exchanges. One extra
-        // exchange in the untimed warm build.
-        .repartition(col("cust"))
-    }
+    purchaseEdges(s, d).filter(col("src") >= 0)
+      .select(col("src").as("cust"), (-col("dst") - 1).as("supp"))
 
-  /** Materialize this module's session memos (Bench warm phase — see
-    * [[SharedMemos]]). purchaseEdges derives from custSuppPairs, so
-    * counting it materializes both. */
+  /** Materialize this module's session memo (Bench warm phase — see
+    * [[SharedMemos]]): the purchase graph, which [[custSuppPairs]]
+    * reads too. */
   private[graft] def warmMemos(s: SparkSession, d: String): Unit = {
     purchaseEdges(s, d).count()
     ()

@@ -40,7 +40,7 @@ object SessionMemo {
   /** Memoize `build` under (key, session, dir, the data version of
     * `dir`'s tables); persists on first use.
     * get-then-putIfAbsent rather than computeIfAbsent: builders NEST
-    * (purchaseEdges derives from the memoized custSuppPairs), and
+    * (insight.basketItems derives from the memoized basketArrays), and
     * ConcurrentHashMap forbids a mapping function touching other keys
     * of the same map ("recursive update"). The benign race — two
     * threads building the same key — loses at putIfAbsent and

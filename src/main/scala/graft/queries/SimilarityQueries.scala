@@ -673,7 +673,7 @@ object SimilarityQueries extends QueryModule {
       .orderBy("d1", "d2")
   }
 
-  /** IVF (inverted-file) ANN: KMeans coarse quantizer assigns every
+  /** IVF (inverted-file) ANN: a k-means coarse quantizer assigns every
     * vector to a centroid cell; a query probes only the nProbe nearest
     * cells, then exact cosine ranks the candidates. The 100 TB shape:
     * the corpus is partitioned by cell id (a k-way partition, not a
@@ -687,86 +687,63 @@ object SimilarityQueries extends QueryModule {
     * trained once offline (or incrementally) and PERSISTED — never
     * refit inside the query path. Build order on a miss:
     *
-    *   in-memory cache → saved index on disk → KMeans fit (then save).
+    *   in-memory cache → saved index on disk → fit (then save).
     *
-    * A fresh session therefore LOADS the index artifact instead of
-    * re-running KMeans — the cold-start path a real deployment runs.
-    * Artifacts live under `spark.graft.ivf.indexDir` (default: a
-    * `graft-ivf-index` dir under java.io.tmpdir), one directory per
-    * dataset VERSION: the key folds in the table's [[Tables.version]],
-    * so a dataset regenerated in place gets a fresh quantizer rather
-    * than stale centroids — the same invalidation a production index
-    * build keys on a data-version id. */
+    * The fit is [[PqIndex.kmeans]] (seed 42) over the
+    * [[PqIndex.trainingSample]] on the driver — one Spark job, and the
+    * same centroids however the embeddings are split into files. A
+    * fresh session LOADS the artifact instead, in PqIndex's format under
+    * `spark.graft.ivf.indexDir` (default: a `graft-ivf-index` dir under
+    * java.io.tmpdir), one file per dataset VERSION: the key folds in
+    * the table's [[Tables.version]], so a dataset regenerated in place
+    * gets a fresh quantizer rather than stale centroids — the same
+    * invalidation a production index build keys on a data-version id.
+    * Returns the nCells × 64 centroids. */
   private val ivfIndex =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), org.apache.spark.ml.clustering.KMeansModel]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Array[Array[Double]]]()
 
   /** Test seam: forget fitted quantizers so the next build must go
     * through the disk artifact (or refit). */
   private[graft] def clearIvfMemoryCache(): Unit = ivfIndex.clear()
 
-  private def ivfIndexPath(s: SparkSession, key: (String, String)): String = {
-    val root = s.conf.getOption("spark.graft.ivf.indexDir").getOrElse(
-      new java.io.File(System.getProperty("java.io.tmpdir"), "graft-ivf-index").toString)
-    // dir identity via sha-256 (paths contain separators; a 32-bit
-    // hashCode collision would silently cold-load ANOTHER dataset's
-    // centroids — worse than a refit), then the data version
-    val dirHash = Tables.digest(key._1)
-    s"$root/ivf-k$nCells-$dirHash-${key._2}"
-  }
-
-  def buildIvfIndex(s: SparkSession, d: String): org.apache.spark.ml.clustering.KMeansModel =
-    ivfIndex.computeIfAbsent((d, Tables.version(s, d, "embeddings")), key => {
-      import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
-      import org.apache.spark.ml.functions.array_to_vector
-      val path = ivfIndexPath(s, key)
-      val loaded =
-        if (new java.io.File(path).exists())
-          try Some(KMeansModel.load(path))
-          catch { case scala.util.control.NonFatal(_) =>
-            None // half-written artifact (e.g. a crashed save): refit below
-          }
-        else None
-      loaded.getOrElse {
-        val e = Tables.embeddings(s, d)
-          .withColumn("vec", array_to_vector(col("embedding")))
-        val m = new KMeans().setK(nCells).setSeed(42)
-          .setFeaturesCol("vec").setPredictionCol("cell")
-          .fit(e)
-        m.write.overwrite().save(path)
-        m
-      }
-    })
+  def buildIvfIndex(s: SparkSession, d: String): Array[Array[Double]] =
+    ivfIndex.computeIfAbsent((d, Tables.version(s, d, "embeddings")), key =>
+      PqIndex.loadOrFit(s, key, s"ivf-k$nCells-n${PqIndex.sampleRows}") {
+        Array(PqIndex.kmeans(PqIndex.trainingSample(s, d), nCells, 42))
+      }.head)
 
   /** The `nProbe` IVF cells nearest `emb`, nearest first — the one
-    * routing of every IVF query: squared L2 to each of the nCells
-    * centroids (a plan literal, like the LSH hyperplanes), sorted by
-    * (dist2, cell), so a tie goes to the lower cell. A row expression:
-    * no join, no shuffle, nothing computed on the driver. */
-  private def nearestCells(model: org.apache.spark.ml.clustering.KMeansModel,
+    * routing of every IVF query, for probes and corpus rows alike:
+    * exact squared L2 to each of the nCells centroids (a plan literal,
+    * like the LSH hyperplanes), sorted by (dist2, cell), so a tie goes
+    * to the lower cell. A row expression: no join, no shuffle, nothing
+    * computed on the driver. */
+  private def nearestCells(cents: Array[Array[Double]],
       emb: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val cents = typedLit(model.clusterCenters.map(_.toArray.toSeq).toSeq)
-    val byDist = transform(cents, (c, i) => struct(
+    val byDist = transform(typedLit(cents.map(_.toSeq).toSeq), (c, i) => struct(
       aggregate(zip_with(emb, c, (x, cc) => (x.cast("double") - cc) * (x.cast("double") - cc)),
         lit(0.0), (a, v) => a + v).as("dist2"),
       i.as("cell")))
     transform(slice(array_sort(byDist), 1, nProbe), _.getField("cell"))
   }
 
+  /** `e` with each row's IVF `cell`: the first of its [[nearestCells]]. */
+  private def withCell(cents: Array[Array[Double]], e: DataFrame): DataFrame =
+    e.withColumn("cell", element_at(nearestCells(cents, col("embedding")), 1))
+
   /** Keeps the rows of `assigned` in the cells [[nearestCells]] routes
     * the query vector (vec_id 0 of `e`) to; the cells are one scalar
     * subquery. */
-  private def inQueryCells(model: org.apache.spark.ml.clustering.KMeansModel,
+  private def inQueryCells(cents: Array[Array[Double]],
       assigned: DataFrame, e: DataFrame): DataFrame =
     assigned.filter(array_contains(e.filter(col("vec_id") === 0)
-      .select(nearestCells(model, col("embedding"))).scalar(), col("cell")))
+      .select(nearestCells(cents, col("embedding"))).scalar(), col("cell")))
 
   private val knnIvf: Q = (s, d) => {
-    import org.apache.spark.ml.functions.array_to_vector
     val e = Tables.embeddings(s, d)
-      .withColumn("vec", array_to_vector(col("embedding")))
-    val model = buildIvfIndex(s, d)
+    val cents = buildIvfIndex(s, d)
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("q_emb"))
-    inQueryCells(model, model.transform(e), e)
+    inQueryCells(cents, withCell(cents, e), e)
       .crossJoin(broadcast(q))
       .select(col("vec_id"), round(cosine(col("embedding"), col("q_emb")), 6).as("cos_sim"))
       .orderBy(desc("cos_sim"), asc("vec_id"))
@@ -784,14 +761,12 @@ object SimilarityQueries extends QueryModule {
     * and per-probe top-k is the bounded-heap [[graft.functions.TopKDecl]].
     * No oracle (learned quantizer); recall-pinned in tests. */
   private val knnBatchIvf: Q = (s, d) => {
-    import org.apache.spark.ml.functions.array_to_vector
-    val model = buildIvfIndex(s, d)
+    val cents = buildIvfIndex(s, d)
     val dot = graft.functions.DotF.dotF _
-    val assigned = model.transform(
-      Tables.embeddings(s, d).withColumn("vec", array_to_vector(col("embedding"))))
+    val assigned = withCell(cents, Tables.embeddings(s, d))
       .withColumn("nrm", sqrt(dot(col("embedding"), col("embedding"))))
     val probeCells = assigned.filter(pmod(col("vec_id"), lit(50)) === 0)
-      .select(explode(nearestCells(model, col("embedding"))).as("cell"),
+      .select(explode(nearestCells(cents, col("embedding"))).as("cell"),
         col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
         col("nrm").as("p_nrm"))
     assigned
@@ -847,8 +822,7 @@ object SimilarityQueries extends QueryModule {
   private def adcSearch(s: SparkSession, d: String, books: PqIndex.Codebooks,
       toBookSpace: Array[Double] => Array[Double],
       codes: org.apache.spark.sql.Column): DataFrame = {
-    import org.apache.spark.ml.functions.array_to_vector
-    val model = buildIvfIndex(s, d)
+    val cents = buildIvfIndex(s, d)
     val e = Tables.embeddings(s, d)
     val qVec = toBookSpace(e.filter(col("vec_id") === 0)
       .select("embedding").head().getSeq[Float](0).map(_.toDouble).toArray)
@@ -866,8 +840,7 @@ object SimilarityQueries extends QueryModule {
       (0 until PqIndex.numSub).map(m =>
         element_at(element_at(typedLit(lut), m + 1),
           element_at(col("codes"), m + 1) + 1)).reduce(_ + _)
-    val assigned = model.transform(e.withColumn("vec", array_to_vector(col("embedding"))))
-    val shortlist = inQueryCells(model, assigned, e)
+    val shortlist = inQueryCells(cents, withCell(cents, e), e)
       .withColumn("codes", codes)
       .select(col("vec_id"), col("codes")) // ADC phase: codes only
       .withColumn("pq_sim",
@@ -927,15 +900,14 @@ object SimilarityQueries extends QueryModule {
       }: _*)
       (array_position(scores, array_min(scores)) - 1).cast("int")
     }
-    adcSearch(s, d, books,
-      q => rot.map(row => row.zip(q).map { case (a, b) => a * b }.sum),
+    adcSearch(s, d, books, OpqIndex.rotate(rot, _),
       array((0 until PqIndex.numSub).map(codeColM): _*))
   }
 
   /** ANN recall as an ORACLE row (VERDICT r8 §4): the LSH family is
     * fully DuckDB-replayable (q_knn_lsh_oracle replays the hyperplane
-    * signs in SQL), but the IVF family's learned KMeans quantizer is
-    * not SQL-expressible — so the recall itself becomes the pinned
+    * signs in SQL), but the IVF family's learned k-means quantizer
+    * is not SQL-expressible — so the recall itself becomes the pinned
     * quantity. The result rows are the EXACT top-10 (DuckDB recomputes
     * vec_id/label/cos_sim from scratch — real oracle work), plus one
     * boolean column asserting the ANN path recalled at least
@@ -1007,15 +979,12 @@ object SimilarityQueries extends QueryModule {
     * no extra clustering pass), keep at most `cap` per cell, survivors
     * chosen by md5(vec_id) so the sample is deterministic. Caps in
     * embedding space preserve coverage of the distribution's modes
-    * where a uniform sample would mirror its density. KMeans cells are
-    * not oracle-expressible → rows-only driver check + invariant tests
+    * where a uniform sample would mirror its density. Learned cells
+    * are not oracle-expressible → rows-only driver check + invariant tests
     * (per-cell caps, determinism, survivor subset). */
   private val clusterCap: Q = (s, d) => {
-    import org.apache.spark.ml.functions.array_to_vector
     val cap = 10
-    val model = buildIvfIndex(s, d)
-    val assigned = model.transform(
-      Tables.embeddings(s, d).withColumn("vec", array_to_vector(col("embedding"))))
+    val assigned = withCell(buildIvfIndex(s, d), Tables.embeddings(s, d))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("cell")
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
@@ -1027,7 +996,7 @@ object SimilarityQueries extends QueryModule {
   }
 
   /** Cap invariants of [[clusterCap]] as a DRIVER-ARTIFACT row (the
-    * q_knn_ivf_recall pin pattern): KMeans cells are not
+    * q_knn_ivf_recall pin pattern): learned cells are not
     * oracle-expressible, but the contract of a cap is — every cell
     * keeps at most `cap` survivors, every survivor is a real vector,
     * cells never exceed the quantizer's k, and the kept set never
@@ -1238,9 +1207,10 @@ object SimilarityQueries extends QueryModule {
 
   /** Declarative Lloyd's k-means (k = 8, 3 iterations, deterministic
     * seeding from the k lowest vec_ids) — the clustering primitive the
-    * IVF family's MLlib quantizer wraps, here expressed so every
-    * iteration is DuckDB-replayable and the whole fit sits in the
-    * driver's hash gate (the MLlib path is ✓t-only by nature).
+    * IVF family's quantizer runs on the driver ([[PqIndex.kmeans]]),
+    * here expressed so every iteration is DuckDB-replayable and the
+    * whole fit sits in the driver's hash gate (the learned quantizer is
+    * ✓t-only by nature).
     *
     * Determinism protocol: centroids and distances are rounded to the
     * 6-decimal grain at every step (the q_resample_fill precedent —
@@ -1419,7 +1389,7 @@ object SimilarityQueries extends QueryModule {
                 FROM vs ORDER BY cs DESC, doc_id LIMIT 50)"""
 
   override val noOracle: Map[String, String] = Map(
-    "q_cluster_cap" -> "KMeans cells not replayable; q_cluster_cap_pin checks the cap invariants",
+    "q_cluster_cap" -> "cells of the learned IVF quantizer (driver k-means) not replayable; q_cluster_cap_pin checks the cap invariants",
     "q_knn_ivf" -> "approximate; q_knn_ivf_recall pins its recall against q_knn_exact",
     "q_knn_ivf_pq" -> "approximate; q_knn_ivf_pq_recall pins its recall against q_knn_exact",
     "q_knn_ivf_opq" -> "approximate; q_knn_ivf_opq_recall pins its recall against q_knn_exact",

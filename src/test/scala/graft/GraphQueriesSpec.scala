@@ -275,4 +275,57 @@ class GraphQueriesSpec extends SparkSpec {
       assert(math.abs(g._2 - sc / maxH) < 1e-6 + 1e-9)
     }
   }
+
+  /** The session's persisted purchase graph (built by any graph query). */
+  private def graphMemo() =
+    graft.queries.SessionMemo("graph.purchaseEdges", spark, sf)(
+      sys.error("the purchase graph memo is not built"))
+      .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+
+  test("the purchase graph is one persisted relation: degree profile and k-core share it") {
+    graft.queries.SessionMemo.drain()
+    graft.queries.CacheRegistry.drain()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Seq("q_graph_degree", "q_kcore").foreach(GraphQueries.queries(_)(spark, sf).collect())
+    graft.queries.CacheRegistry.drain() // the per-query peel rounds
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.size == 1, s"expected one persisted graph relation, got ${added.size}")
+    assert(spark.sharedState.cacheManager.lookupCachedData(graphMemo()).nonEmpty)
+  }
+
+  /** Exchange nodes in the physical plan of `df` as planned (AQE's
+    * initial plan: its runtime re-plans move q_pagerank's count by ±1
+    * from run to run), through subqueries and the query's own persisted
+    * relations, but not through the session's persisted purchase graph,
+    * whose exchanges run once per session. */
+  private def exchanges(df: org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val memo = spark.sharedState.cacheManager.lookupCachedData(graphMemo())
+      .get.cachedRepresentation.cacheBuilder
+    def count(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => count(a.executedPlan)
+      case q: QueryStageExec => count(q.plan)
+      case m: InMemoryTableScanExec =>
+        if (m.relation.cacheBuilder eq memo) 0 else count(m.relation.cachedPlan)
+      case _ =>
+        (if (p.isInstanceOf[Exchange]) 1 else 0) +
+          (p.children ++ p.subqueries).map(count).sum
+    }
+    count(df.queryExecution.executedPlan)
+  }
+
+  test("reading the pairs as a view of the edge list adds no exchange to its consumers") {
+    // counted at sf0.001 on the two-memo layout this replaced, where the
+    // pairs were a second persist partitioned by cust
+    val before = Seq("q_kcore" -> 1, "q_link_predict" -> 6, "q_modularity" -> 29,
+      "q_hits" -> 24, "q_pagerank" -> 13)
+    GraphQueries.warmMemos(spark, sf) // AQE plans against the built memo
+    val now = before.map { case (n, _) => n -> exchanges(GraphQueries.queries(n)(spark, sf)) }.toMap
+    before.foreach { case (n, c) =>
+      assert(now(n) <= c, s"$n plans ${now(n)} exchanges, ${c} before: $now")
+    }
+  }
 }

@@ -277,22 +277,23 @@ class TextSimilaritySpec extends SparkSpec {
 
   test("ivf index persists to disk; a cold session loads it and knn output is unchanged") {
     val idxDir = java.nio.file.Files.createTempDirectory("graft-ivf-idx").toString
-    val prev = spark.conf.getOption("spark.graft.ivf.indexDir")
-    try {
-      spark.conf.set("spark.graft.ivf.indexDir", idxDir)
+    def artifacts = new java.io.File(idxDir).listFiles().map(_.getName).toSet
+    try withConf("spark.graft.ivf.indexDir" -> idxDir) {
       SimilarityQueries.clearIvfMemoryCache()
       // first query fits the quantizer AND writes the index artifact
       val before = SimilarityQueries.queries("q_knn_ivf")(spark, sf)
         .collect().map(_.toSeq).toSeq
-      val builtUid = SimilarityQueries.buildIvfIndex(spark, sf).uid
-      val artifacts = new java.io.File(idxDir).listFiles()
-      assert(artifacts != null && artifacts.nonEmpty, "index artifact must be on disk")
+      val built = SimilarityQueries.buildIvfIndex(spark, sf)
+      assert(artifacts.nonEmpty, "index artifact must be on disk")
       // cold session stand-in: drop the in-memory cache; the rebuild must
-      // come from the DISK artifact — proven by the restored uid (a refit
-      // would mint a fresh random uid) — and produce identical knn rows
+      // come from the DISK artifact — proven by a reload that starts no
+      // Spark job (a refit collects its training sample) — and return
+      // bit-identical centroids and identical knn rows
       SimilarityQueries.clearIvfMemoryCache()
-      assert(SimilarityQueries.buildIvfIndex(spark, sf).uid == builtUid,
+      var loaded = Array.empty[Array[Double]]
+      assert(jobsDuring { loaded = SimilarityQueries.buildIvfIndex(spark, sf) } == 0,
         "expected the quantizer to load from the saved index, not refit")
+      assert(deep(loaded) == deep(built), "cold-loaded centroids differ")
       val after = SimilarityQueries.queries("q_knn_ivf")(spark, sf)
         .collect().map(_.toSeq).toSeq
       assert(after == before)
@@ -301,19 +302,72 @@ class TextSimilaritySpec extends SparkSpec {
       // (mtime, size) -> fresh fit under a new artifact path
       val dataDir = java.nio.file.Files.createTempDirectory("graft-ivf-data").toString
       Tables.embeddings(spark, sf).write.parquet(s"$dataDir/embeddings.parquet")
-      val uid1 = SimilarityQueries.buildIvfIndex(spark, dataDir).uid
+      SimilarityQueries.buildIvfIndex(spark, dataDir)
+      val firstVersion = artifacts
       val pq = new java.io.File(s"$dataDir/embeddings.parquet")
       assert(pq.setLastModified(pq.lastModified() + 60000))
       SimilarityQueries.clearIvfMemoryCache()
-      val uid2 = SimilarityQueries.buildIvfIndex(spark, dataDir).uid
-      assert(uid2 != uid1, "a new data version must get a fresh quantizer, not stale centroids")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.graft.ivf.indexDir", v)
-        case None    => spark.conf.unset("spark.graft.ivf.indexDir")
+      assert(jobsDuring(SimilarityQueries.buildIvfIndex(spark, dataDir)) >= 1,
+        "a new data version must get a fresh quantizer, not stale centroids")
+      assert((artifacts -- firstVersion).size == 1,
+        s"a new data version must write a new artifact: $firstVersion -> $artifacts")
+    } finally SimilarityQueries.clearIvfMemoryCache()
+  }
+
+  private def deep(c: Array[Array[Double]]): Seq[Seq[Double]] = c.map(_.toSeq).toSeq
+
+  private def clearQuantizers(): Unit = {
+    SimilarityQueries.clearIvfMemoryCache()
+    PqIndex.clearMemoryCache()
+    OpqIndex.clearMemoryCache()
+  }
+
+  /** IVF centroids, PQ codebooks and OPQ codebooks of `d`, deep-copied
+    * into comparable sequences. */
+  private def quantizers(d: String): Seq[Seq[Seq[Double]]] =
+    Seq(deep(SimilarityQueries.buildIvfIndex(spark, d))) ++
+      PqIndex.codebooks(spark, d).map(deep) ++ OpqIndex.codebooks(spark, d).map(deep)
+
+  test("the ivf, pq and opq quantizers are a pure function of the embedding rows") {
+    val root = java.nio.file.Files.createTempDirectory("graft-quant-split").toString
+    val e = Tables.embeddings(spark, sf)
+    e.coalesce(1).write.parquet(s"$root/one/embeddings.parquet")
+    e.repartition(4).write.parquet(s"$root/four/embeddings.parquet")
+    assert(new java.io.File(s"$root/four/embeddings.parquet").listFiles()
+      .count(_.getName.endsWith(".parquet")) == 4)
+    val idx = new java.io.File(s"$root/idx")
+    try withConf("spark.graft.ivf.indexDir" -> idx.toString) {
+      clearQuantizers()
+      val one = quantizers(s"$root/one")
+      // one file or four part files: the same rows give the same bits
+      val four = quantizers(s"$root/four")
+      Seq("ivf centroids" -> (0 until 1), "pq codebooks" -> (1 to PqIndex.numSub),
+        "opq codebooks" -> (PqIndex.numSub + 1 to 2 * PqIndex.numSub)).foreach {
+        case (what, books) =>
+          assert(books.map(one) == books.map(four), s"$what depend on the file split")
       }
-      SimilarityQueries.clearIvfMemoryCache()
-    }
+      // a refit with no memory cache and no artifact reproduces every bit
+      clearQuantizers()
+      idx.listFiles().foreach(_.delete())
+      assert(quantizers(s"$root/one") == one, "a refit changed the quantizers")
+    } finally clearQuantizers()
+  }
+
+  test("a cold quantizer build starts at most 1 job for ivf and pq and 3 for opq; a reload none") {
+    val idxDir = java.nio.file.Files.createTempDirectory("graft-quant-jobs").toString
+    try withConf("spark.graft.ivf.indexDir" -> idxDir) {
+      clearQuantizers()
+      Tables.embeddings(spark, sf) // the schema is read before counting
+      val ivf = jobsDuring(SimilarityQueries.buildIvfIndex(spark, sf))
+      val pq = jobsDuring(PqIndex.codebooks(spark, sf))
+      val opq = jobsDuring { OpqIndex.rotation(spark, sf); OpqIndex.codebooks(spark, sf) }
+      assert(ivf <= 1 && pq <= 1 && opq <= 3, s"cold build jobs: ivf $ivf, pq $pq, opq $opq")
+      val built = quantizers(sf)
+      clearQuantizers()
+      var loaded = Seq.empty[Seq[Seq[Double]]]
+      assert(jobsDuring { loaded = quantizers(sf) } == 0, "a reload must not refit")
+      assert(loaded == built, "reloaded quantizers differ")
+    } finally clearQuantizers()
   }
 
   test("ivf-pq knn recalls at least the ivf baseline at equal probe budget") {
